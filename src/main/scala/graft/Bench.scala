@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
@@ -15,6 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    builds offline too) and reported separately as `cube_build_sec`;
   *  - a failing query aborts the run loudly (exit 1) instead of being
   *    recorded as a plausible timing.
+  *
+  * `--keys k1,k2` times only those keys and prints each one's warm
+  * jobs and costliest stages; `--plans dir` also dumps every timed
+  * key's `explain("formatted")` to `dir/<key>.txt` (the before/after
+  * plan record of an optimization).
   */
 object Bench {
   def materialize(df: DataFrame): Unit =
@@ -53,348 +61,158 @@ object Bench {
     "emb_topk_lsh", "emb_topk_pq", "ev_session_window", "ev_sessionize",
     "src_jdbc_roundtrip", "src_orc_roundtrip")
 
-  /** Usage-log → planner loop over the REAL workload the bench just
-    * ran (reference: CuboidRecommendAlgorithm, cube planner phase 2):
-    * every route the two timed passes executed is in
-    * `QueryRouter.QueryStats`; feed that log to `recommendFromLog` and
-    * report the recommended lattice next to the hand-declared one —
-    * materialized planned rows (build cost) and Σ smallest-covering-
-    * cuboid rows over the log (query cost) for each. */
-  private def plannerReport(spark: SparkSession, sfDir: String): String =
-    try {
-      val inst = cube.CubeManager.ensureBuilt(spark, sfDir)
-      val base = inst.cube.dims.toSet
-      val log = cube.QueryRouter.QueryStats.log(inst.cube.name)
-        .filter(_.nonEmpty)
-      if (log.isEmpty) return """{"logged":0}"""
-      val flat = cube.CubeManager.flatTable(spark, sfDir)
-      val rec = cube.CuboidPlanner.recommendFromLog(
-        flat, base, log, maxCuboids = inst.cube.cuboids.size)
-      val declared = inst.cube.cuboids
-      val rows = cube.CuboidPlanner.estimateRows(
-        flat, (rec ++ declared).distinct)
-      def planned(mat: Seq[Set[String]]): Long = mat.map(rows).sum
-      def workloadCost(mat: Seq[Set[String]]): Long = log.map { q =>
-        val covering = mat.filter(q.subsetOf(_))
-        if (covering.isEmpty) rows(base) else covering.map(rows).min
-      }.sum
-      val covered = log.forall(q => rec.exists(q.subsetOf(_)))
-      s"""{"logged":${log.size},"distinct_shapes":${log.distinct.size},""" +
-        s""""recommended_cuboids":${rec.size},""" +
-        s""""declared_cuboids":${declared.size},""" +
-        s""""planned_rows_recommended":${planned(rec)},""" +
-        s""""planned_rows_declared":${planned(declared)},""" +
-        s""""workload_rows_recommended":${workloadCost(rec)},""" +
-        s""""workload_rows_declared":${workloadCost(declared)},""" +
-        s""""covers_log":$covered}"""
-    } catch {
-      case e: Exception => s"""{"error":"${e.getClass.getSimpleName}"}"""
-    }
+  /** the load gate's ceiling: ambient 1-min load per processor */
+  val MaxLoadRatio = 0.15
 
-  /** Dashboard-style replay probe (VERDICT r10 item 8): the timed oracle
-    * keys go through sqlVia on purpose (each pass must pay real routing,
-    * or pass-2 timings would measure cache replay, not the engine), so
-    * the result cache needs its own measurement. Issue a representative
-    * routed query through sqlCached three times — first populates, the
-    * replays must HIT — and report the counters plus the replay speedup
-    * in the bench JSON. */
-  private def resultCacheReport(spark: SparkSession, sfDir: String): String =
-    try {
-      val q = "SELECT n_name, count(*) AS n FROM " +
-        s"${cube.GraftSql.ViewName} GROUP BY n_name"
-      def timed(): Double = {
-        val t0 = System.nanoTime()
-        val r = cube.GraftSql.sqlCached(spark, sfDir, q)
-        r.df.collect(): Unit
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = timed()
-      val warm = math.min(timed(), timed())
-      val (h, m, e) = cube.GraftSql.resultCacheStats
-      s"""{"hits":$h,"misses":$m,"evictions":$e,""" +
-        f""""cold_sec":$cold%.4f,"warm_sec":$warm%.4f}"""
-    } catch {
-      case ex: Exception => s"""{"error":"${ex.getClass.getSimpleName}"}"""
-    }
+  private val Usage = "Bench [--keys k1,k2] [--plans dir]"
 
-  /** Fleet (L2) tier probe (VERDICT r15 item 7): the shared-store
-    * result cache gets the same bench-tracked observability the L1
-    * has had since r13. Point the tier at a temp dir, pay one cold
-    * routed query (compute + write-through), then simulate a FRESH
-    * process (manager memos + L1 dropped) and replay — the second
-    * timing is a pure L2 hit served from the cache payload. Reported:
-    * tier counters, committed entries, and the cold-vs-hit pair. */
-  private def fleetCacheReport(spark: SparkSession, sfDir: String): String =
-    try {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-bench-fleet").toString
-      spark.conf.set(cube.FleetCache.DirConf, dir)
-      try {
-        val q = "SELECT o_orderstatus, count(*) AS n FROM " +
-          s"${cube.GraftSql.ViewName} GROUP BY o_orderstatus"
-        def timed(): Double = {
-          val t0 = System.nanoTime()
-          val r = cube.GraftSql.sqlCached(spark, sfDir, q)
-          r.df.collect(): Unit
-          (System.nanoTime() - t0) / 1e9
+  /** job property naming the `pass:key` that submitted a job */
+  private val KeyProp = "graft.bench.key"
+
+  /** Per-stage attribution for `--keys` runs: a short query's fixed
+    * cost is its jobs and stages (Dremel, VLDB 2020), so they print
+    * next to its wall time. Every job carries the [[KeyProp]] of the
+    * pass that submitted it, so a listener event delivered late is
+    * still charged to its own key and pass. */
+  private final class StageLog extends SparkListener {
+    private val stageKey = mutable.Map.empty[Int, String]
+    private val stages = mutable.Map.empty[String, Vector[StageInfo]]
+    private val jobs = mutable.Map.empty[String, Int]
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      Option(j.properties).flatMap(p => Option(p.getProperty(KeyProp)))
+        .foreach { k =>
+          jobs(k) = jobs.getOrElse(k, 0) + 1
+          j.stageIds.foreach(stageKey(_) = k)
         }
-        val cold = timed() // compute + write-through
-        cube.CubeManager.resetMemos() // fresh-process state
-        val hit = timed() // served from the shared tier
-        val (h, m) = cube.GraftSql.fleetCacheStats
-        val n = cube.FleetCache.entryCount(spark, dir)
-        s"""{"hits":$h,"misses":$m,"entries":$n,""" +
-          f""""cold_sec":$cold%.4f,"l2_hit_sec":$hit%.4f}"""
-      } finally spark.conf.unset(cube.FleetCache.DirConf)
-    } catch {
-      case ex: Exception => s"""{"error":"${ex.getClass.getSimpleName}"}"""
     }
-
-  /** Phase-2 REPLAN probe (§2 row 28h): deploy a base-only declared
-    * cube, persist a hot-shape query history, and time
-    * `CubeJson.applyReplan` — the full lifecycle op (lease + log read
-    * + per-segment estimation + optimizeCuboids + meta commit) — plus
-    * the idempotent second run (existing layouts are the baseline, so
-    * it must add nothing). The root is recreated per run so `added`
-    * is deterministic. The one-time build is reported separately so
-    * `replan_sec` is the operation's own cost. */
-  private def replanReport(spark: SparkSession, sfDir: String): String =
-    try {
-      val doc =
-        """{
-          |  "name": "orders_replan_probe",
-          |  "model": {"fact": "orders"},
-          |  "flatColumns": [
-          |    {"name": "o_orderstatus"},
-          |    {"name": "o_orderpriority"},
-          |    {"name": "o_month",
-          |     "expr": "date_format(o_orderdate, 'yyyy-MM')"},
-          |    {"name": "o_orderdate"},
-          |    {"name": "o_totalprice"}
-          |  ],
-          |  "dims": ["o_orderstatus", "o_orderpriority", "o_month"],
-          |  "measures": [
-          |    {"name": "price_sum", "family": "sum",
-          |     "column": "o_totalprice", "decimal": true,
-          |     "presentDouble": true},
-          |    {"name": "n_orders", "family": "count"}
-          |  ],
-          |  "segmentCol": "o_orderdate",
-          |  "segments": [{"name": "all", "start": "1992-01-01",
-          |                "end": "2003-01-01"}],
-          |  "segDayGranular": true
-          |}""".stripMargin
-      val spec = cube.CubeJson.parse(doc)
-      val sfName = sfDir.split('/').last
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-        s"${cube.CubeManager.cubeRoot}/$sfName-orders_replan_probe")): Unit
-      val logDir = java.nio.file.Files
-        .createTempDirectory("graft-bench-replan").toString
-      (1 to 32).foreach(i => cube.QueryLog.record(spark, logDir, s"r$i",
-        "cuboid", Some(spec.name), Some(Set("o_orderstatus")), 10L, 100L))
-      cube.QueryLog.flush(spark, logDir)
-      val tb = System.nanoTime()
-      cube.CubeManager.ensureDeclared(spark, sfDir, spec): Unit
-      val buildSec = (System.nanoTime() - tb) / 1e9
-      val t0 = System.nanoTime()
-      val (next, added) = cube.CubeJson.applyReplan(spark, sfDir, spec,
-        budget = 100000000L, logDir)
-      val replanSec = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val (_, again) = cube.CubeJson.applyReplan(spark, sfDir, spec,
-        budget = 100000000L, logDir)
-      val noopSec = (System.nanoTime() - t1) / 1e9
-      s"""{"added":$added,"noop_added":$again,""" +
-        s""""cuboids":${next.cube.cuboids.size},""" +
-        f""""build_sec":$buildSec%.2f,"replan_sec":$replanSec%.2f,""" +
-        f""""noop_sec":$noopSec%.2f}"""
-    } catch {
-      case ex: Exception => s"""{"error":"${ex.getClass.getSimpleName}"}"""
-    }
-
-  /** the refresh probe (§2 row 35aa3): a four-segment declared cube —
-    * full build vs a ONE-segment refresh from source. The dir counts
-    * carry the lifecycle claim itself: a refresh rewrites the
-    * refreshed segment's cuboid dirs, not the cube's. */
-  private def refreshReport(spark: SparkSession, sfDir: String): String =
-    try {
-      val doc =
-        """{
-          |  "name": "li_refresh_probe",
-          |  "model": {"fact": "lineitem"},
-          |  "flatColumns": [
-          |    {"name": "l_returnflag"},
-          |    {"name": "l_linestatus"},
-          |    {"name": "l_shipdate"},
-          |    {"name": "l_quantity"}
-          |  ],
-          |  "dims": ["l_returnflag", "l_linestatus"],
-          |  "cuboids": [["l_returnflag"], ["l_linestatus"]],
-          |  "measures": [
-          |    {"name": "qty_sum", "family": "sum",
-          |     "column": "l_quantity", "decimal": true,
-          |     "presentDouble": true},
-          |    {"name": "n_items", "family": "count"}
-          |  ],
-          |  "segmentCol": "l_shipdate",
-          |  "segments": [
-          |    {"name": "q1", "start": "1992-01-01", "end": "1993-10-01"},
-          |    {"name": "q2", "start": "1993-10-01", "end": "1995-07-01"},
-          |    {"name": "q3", "start": "1995-07-01", "end": "1997-04-01"},
-          |    {"name": "q4", "start": "1997-04-01", "end": "1999-01-01"}],
-          |  "segDayGranular": true
-          |}""".stripMargin
-      val spec = cube.CubeJson.parse(doc)
-      val sfName = sfDir.split('/').last
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-        s"${cube.CubeManager.cubeRoot}/$sfName-li_refresh_probe")): Unit
-      val tb = System.nanoTime()
-      val inst = cube.CubeManager.ensureDeclared(spark, sfDir, spec)
-      val buildSec = (System.nanoTime() - tb) / 1e9
-      val flat = cube.CubeJson.flatBuilder(spec, Some(inst.root))(
-        spark, sfDir)
-      // the structural claim, not just the wall-clock one (an idle
-      // local[32] builds all four segments CONCURRENTLY, so build
-      // wall ≈ one segment's work; total WORK is what matters at
-      // cluster scale): record every cuboid dir's mtime, refresh one
-      // segment, count which dirs were rewritten.
-      def cuboidDirs(): Map[String, Long] = {
-        val base = new java.io.File(s"${inst.root}/${spec.name}")
-        Option(base.listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory)
-          .flatMap(seg => Option(seg.listFiles()).getOrElse(Array.empty)
-            .filter(d => d.isDirectory && d.getName.startsWith("cuboid=")))
-          .map(d => d.getPath -> d.lastModified()).toMap
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      synchronized {
+        stageKey.remove(s.stageInfo.stageId).foreach { k =>
+          stages(k) = stages.getOrElse(k, Vector.empty) :+ s.stageInfo
+        }
       }
-      val before = cuboidDirs()
-      val t0 = System.nanoTime()
-      cube.CubeBuilder.refreshSegment(spark, inst, flat, "q2"): Unit
-      val refreshSec = (System.nanoTime() - t0) / 1e9
-      val after = cuboidDirs()
-      val preserved = before.count { case (p, m) => after.get(p).contains(m) }
-      f"""{"build_sec":$buildSec%.2f,"refresh_sec":$refreshSec%.2f,""" +
-        s""""segments":${inst.cube.segments.size},""" +
-        s""""cuboid_dirs":${after.size},""" +
-        s""""dirs_rewritten":${after.size - preserved},""" +
-        s""""dirs_preserved":$preserved}"""
-    } catch {
-      case ex: Exception => s"""{"error":"${ex.getClass.getSimpleName}"}"""
+
+    /** the key's pass-2 (warm) jobs and its 12 costliest stages */
+    def report(key: String, cold: Double, warm: Double): Unit = {
+      val (ss, nj) = synchronized {
+        (stages.getOrElse(s"2:$key", Vector.empty),
+          jobs.getOrElse(s"2:$key", 0))
+      }
+      def run(s: StageInfo) = s.taskMetrics.executorRunTime / 1e3
+      println(f"== $key  cold=$cold%.3f s  warm=$warm%.3f s  jobs=$nj  " +
+        f"stages=${ss.size}  execRunSum=${ss.map(run).sum}%.2f s")
+      ss.sortBy(-run(_)).take(12).foreach { s =>
+        val (m, sh) = (s.taskMetrics, s.taskMetrics.shuffleReadMetrics)
+        println(f"   stage ${s.stageId}%4d run=${run(s)}%7.3f s  " +
+          f"cpu=${m.executorCpuTime / 1e9}%7.3f s  gc=${m.jvmGCTime / 1e3}%6.3f s  " +
+          f"fw=${sh.fetchWaitTime / 1e3}%6.3f s  tasks=${s.numTasks}%3d  " +
+          f"shR=${sh.totalBytesRead / 1024}%8d KB  " +
+          f"shW=${m.shuffleWriteMetrics.bytesWritten / 1024}%8d KB")
+      }
     }
+  }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val opts = GraftSession.flags(args.toSeq, Set("--keys", "--plans"), Usage)
+    val keyed = opts.get("--keys")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    keyed.toSeq.flatten.filterNot(SparkEntry.queries.contains)
+      .foreach(k => GraftSession.refuse(s"unknown key: $k", Usage))
+    val sfDir = GraftSession.sfDir
     // Load GATE (VERDICT r16 wrong #2): a bench taken on a loaded
-    // machine is a wrong artifact even when the code is right, and
-    // committed records kept re-litigating a ±30% machine band.
-    // Ambient load is sampled HERE — at process entry, before any
-    // Spark work — because the bench's own 32-thread cube build
-    // legitimately pushes the 1-min loadavg to ~7 on an otherwise
-    // idle box (the r16 idle record reads before=7.02): gating on the
-    // post-build sample would refuse every honest record. The gate's
-    // verdict rides the record (`load_gate`), and a failing gate
-    // refuses to PERSIST target/bench.json (the committed-record
-    // source) while still printing the driver's one-line contract —
-    // the stdout record then carries its own invalidity evidence.
-    val gateStartLoad = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val gateMaxRatio = sys.env.get("SPARK_GRAFT_BENCH_MAX_LOAD")
-      .map(_.toDouble).getOrElse(0.15)
-    // normalize by the MACHINE's processors, not SPARK_GRAFT_CPUS:
-    // loadavg is machine-wide, and the Spark thread count is an
-    // unrelated knob (dividing by its default 4 would refuse a
-    // genuinely idle 32-core box). getSystemLoadAverage returns -1 on
-    // platforms without the metric — a negative ratio passes, and the
-    // record shows ambient -1 so the pass is visibly evidence-free.
+    // machine is a wrong artifact even when the code is right. Ambient
+    // load is sampled at process entry, before the bench's own cube
+    // build pushes the loadavg up, and normalized by the MACHINE's
+    // processors, not SPARK_GRAFT_CPUS (loadavg is machine-wide; -1
+    // where unsupported, which passes visibly). A failing gate still
+    // prints both lines, carrying `load_gate`, but never persists
+    // target/bench.json — and neither does a `--keys` subset.
+    val gateStartLoad = GraftSession.loadAvg()
     val gateRatio =
       gateStartLoad / Runtime.getRuntime.availableProcessors()
-    val gatePassed = gateRatio <= gateMaxRatio
-    if (!gatePassed) {
+    val gatePassed = gateRatio <= MaxLoadRatio
+    if (!gatePassed && keyed.isEmpty) {
       System.err.println(f"[bench] LOAD GATE FAILED: ambient 1-min " +
         f"load $gateStartLoad%.2f / " +
         f"${Runtime.getRuntime.availableProcessors()} processors = " +
-        f"$gateRatio%.3f > $gateMaxRatio%.2f — timings will print but " +
+        f"$gateRatio%.3f > $MaxLoadRatio%.2f — timings will print but " +
         "target/bench.json will NOT be persisted; rerun idle")
       // a stale previous record would read passed:true while the
-      // CURRENT machine state is gated — never leave a misleadingly
-      // valid artifact behind a refusal (and never FAIL silently at
-      // removing it: an undeletable stale record is exactly the
-      // artifact the gate exists to keep out of the pipeline)
+      // CURRENT machine state is gated — remove it, loudly on failure
       scala.util.Try(java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get("target/bench.json")))
         .failed.foreach(e => System.err.println(
           s"[bench] could not remove the stale target/bench.json: $e " +
             "— that record predates this gated run; do not commit it"))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The default generated-class cache (100 entries, JVM-wide) is
-      // sized for one repeated query, not a 105-key workload: each key
-      // compiles several projections/encoders, so by the time pass 2
-      // replays a key its classes were evicted and Janino recompiles
-      // them — measured +0.7 s on the typed-cogroup key alone. A
-      // long-running query server should size this to its distinct
-      // plan count (static conf — must precede the first session).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // acceleration rule available (off unless spark.graft.accelerate).
-      // Cost of the disabled rule measured by A/B at sf0.1: within
-      // run-to-run noise (68.0 s without vs 69.8 s with, same band).
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // Untimed warmup: spins up executors, codegen, parquet footer caches.
     materialize(SparkEntry.queries("q02_agg_pricing")(spark, sfDir))
 
     // Untimed cube build + segment merge (offline in Kylin's model);
     // timed separately so query latencies are pure query cost.
-    val tCube0 = System.nanoTime()
-    cube.CubeManager.ensureBuilt(spark, sfDir)
-    cube.CubeManager.ensureMerged(spark, sfDir)
-    val cubeBuildSec = (System.nanoTime() - tCube0) / 1e9
+    val cubeBuildSec = GraftSession.sec {
+      cube.CubeManager.ensureBuilt(spark, sfDir)
+      cube.CubeManager.ensureMerged(spark, sfDir)
+    }._2
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    def timeOne(name: String): Double = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      try materialize(fn(spark, sfDir))
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: $e")
-          spark.stop()
-          sys.exit(1)
-      }
-      (System.nanoTime() - t0) / 1e9
+    val names = keyed.getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    val stageLog = keyed.map { _ =>
+      val l = new StageLog
+      spark.sparkContext.addSparkListener(l)
+      l
     }
-    def timeAll(): Seq[(String, Double)] = names.map(n => n -> timeOne(n))
-    // contention tripwire (VERDICT r11 item 2): a bench taken on a busy
-    // machine is a wrong artifact even when the code is right — record
-    // the 1-min system load around each pass so the JSON carries its
-    // own validity evidence, and re-measure any key whose two passes
-    // disagree by >2x (GC jitter is possible; sustained 2x on a
-    // non-trivial key usually means a noisy neighbor stole the cores)
-    def loadAvg(): Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val loadBefore = loadAvg()
+    def timeOne(name: String, pass: Int): Double = {
+      val fn = SparkEntry.queries(name)
+      spark.sparkContext.setLocalProperty(KeyProp, s"$pass:$name")
+      GraftSession.sec {
+        try materialize(fn(spark, sfDir))
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: $e")
+            spark.stop()
+            sys.exit(1)
+        }
+      }._2
+    }
+    def timeAll(pass: Int): Seq[(String, Double)] =
+      names.map(n => n -> timeOne(n, pass))
+    // contention tripwire (VERDICT r11 item 2): the load around each
+    // pass rides the JSON as validity evidence, and any key whose two
+    // passes disagree by >2x (a noisy neighbor, not GC) is re-measured
+    val loadBefore = GraftSession.loadAvg()
     // two timed passes, min per query: a single pass is exposed to GC /
     // compilation jitter (observed ±8s spikes on individual queries)
-    val p1 = timeAll().toMap
-    val loadMid = loadAvg()
-    val p2 = timeAll()
-    val loadAfter = loadAvg()
+    val p1 = timeAll(1).toMap
+    val loadMid = GraftSession.loadAvg()
+    val p2 = timeAll(2)
+    val loadAfter = GraftSession.loadAvg()
     val retried = p2.collect { case (n, t)
         if math.max(t, p1(n)) > 2 * math.min(t, p1(n)) &&
            math.max(t, p1(n)) > 0.5 => n }
-    val p3 = retried.map(n => n -> timeOne(n)).toMap
+    val p3 = retried.map(n => n -> timeOne(n, 3)).toMap
     // the retry pass needs its own load bracket: its timings replace
     // published numbers, so they must carry validity evidence too
-    val loadRetry = loadAvg()
+    val loadRetry = GraftSession.loadAvg()
+    spark.sparkContext.setLocalProperty(KeyProp, null)
     val results = p2.map { case (n, t) =>
       n -> math.min(math.min(t, p1(n)), p3.getOrElse(n, Double.MaxValue)) }
+    stageLog.foreach { log =>
+      Thread.sleep(500) // let the listener bus drain
+      p2.foreach { case (n, t) => log.report(n, p1(n), t) }
+    }
+    opts.get("--plans").foreach { dir =>
+      val planDir = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.createDirectories(planDir)
+      names.foreach { n =>
+        val txt = SparkEntry.queries(n)(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.write(planDir.resolve(s"$n.txt"),
+          txt.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+      }
+    }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // pass-1 times verbatim: several dedup/ANN keys share memoized
@@ -407,7 +225,7 @@ object Bench {
       f""""after":$loadAfter%.2f,"after_retry":$loadRetry%.2f,""" +
       s""""cpus":${Runtime.getRuntime.availableProcessors()}}"""
     val gateJson = f"""{"ambient_load":$gateStartLoad%.2f,""" +
-      f""""ratio":$gateRatio%.3f,"max_ratio":$gateMaxRatio%.2f,""" +
+      f""""ratio":$gateRatio%.3f,"max_ratio":$MaxLoadRatio%.2f,""" +
       s""""passed":$gatePassed}"""
     val retriedJson = retried.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
@@ -416,22 +234,14 @@ object Bench {
     val phases = cube.CubeBuilder.phaseTotals.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
-    val planner = plannerReport(spark, sfDir)
-    val cacheReport = resultCacheReport(spark, sfDir)
-    val fleetReport = fleetCacheReport(spark, sfDir)
-    val replanJson = replanReport(spark, sfDir)
-    val refreshJson = refreshReport(spark, sfDir)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_first_pass":$qsFirst,"load_avg":$loadJson,"load_gate":$gateJson,"retried":$retriedJson,"cube_build_sec":$cubeBuildSec,"build_phases":$phases,"planner":$planner,"result_cache":$cacheReport,"fleet_cache":$fleetReport,"replan":$replanJson,"refresh":$refreshJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_first_pass":$qsFirst,"load_avg":$loadJson,"load_gate":$gateJson,"retried":$retriedJson,"cube_build_sec":$cubeBuildSec,"build_phases":$phases,"sf":"$sfDir"}"""
     println(json)
-    // The driver keeps only the last ~2000 chars of stdout, and the full
-    // record above (134 queries × two maps + sub-reports, ~10 KB) has
-    // never fit — BENCH_r14..r19 all read parsed:null. Emit a final
-    // COMPACT line that fits the tail window whole: the 36 pinned
-    // baseline keys (BASELINE.md's comparison rule — later rounds are
-    // graded on these, not the raw total) at 3 decimals, plus
-    // suite-level summary. The full per-query map stays in
-    // target/bench.json (committed per round as BENCH_local_rN.json).
+    // A final COMPACT line that fits a ~2000-char stdout tail whole
+    // (the full record above, ~10 KB, never did): the 36 pinned
+    // baseline keys (BASELINE.md's comparison rule) + 16 pipeline keys
+    // at 3 decimals, plus suite-level summary. The full per-query map
+    // stays in target/bench.json.
     val resMap = results.toMap
     val qsCompact = (BaselineKeys ++ PipelineKeys).filter(resMap.contains)
       .map(k => "\"" + k + "\":" + f"${resMap(k)}%.3f")
@@ -440,26 +250,16 @@ object Bench {
     println(
       s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec",""" +
       s""""queries":$qsCompact,""" +
-      s""""queries_note":"36 baseline + 16 pipeline keys; full ${resMap.size}-key map in target/bench.json",""" +
+      s""""queries_note":"36 baseline + 16 pipeline keys; full ${resMap.size}-key map ${if (keyed.isEmpty) "in target/bench.json" else "on the line above"}",""" +
       f""""baseline_total_sec":$baselineTotal%.2f,""" +
       s""""n_queries":${resMap.size},""" +
       f""""mean_sec":${total / resMap.size}%.3f,""" +
       f""""cube_build_sec":$cubeBuildSec%.2f,""" +
       s""""gate_passed":$gatePassed,"sf":"$sfDir"}""")
     // also persist the full map: the driver's stdout tail truncated in
-    // round 5 and lost the fast keys from round-over-round comparison.
-    // Write-then-ATOMIC_MOVE (VERDICT r12 item 7): a reader — or a
-    // crash — mid-write must see the previous complete artifact or the
-    // new one, never a parseable-looking fragment
-    if (gatePassed) try {
-      val tmp = java.nio.file.Paths.get("target/bench.json.tmp")
-      java.nio.file.Files.write(tmp,
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp,
-        java.nio.file.Paths.get("target/bench.json"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    } catch { case _: java.io.IOException => () }
+    // round 5 and lost the fast keys from round-over-round comparison
+    if (gatePassed && keyed.isEmpty)
+      GraftSession.writeJson("target/bench.json", json)
     spark.stop()
   }
 }

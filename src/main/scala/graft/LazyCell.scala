@@ -14,14 +14,26 @@ package graft
   * computation (never two persists of the same frame) while requests
   * for other keys proceed.
   *
-  * `ifForced` is for eviction hooks: releasing a pinned resource
+  * `release` is for eviction hooks: releasing a pinned resource
   * (unpersist) must not FORCE a never-used cell just to release it.
-  * The only leak window — a cell evicted before its creator forces
-  * it — requires `cap` other misses between insert and the immediate
-  * `.value` read, and costs one recompute-on-action frame, not
-  * wrongness. */
+  * A cell evicted before (or while) it is forced is marked instead,
+  * and the force that computes it releases the fresh value right
+  * after — its reader gets a recompute-on-action value, and nothing
+  * stays pinned past the eviction. */
 final class LazyCell[V](thunk: => V) {
-  @volatile private var forced = false
-  lazy val value: V = { val v = thunk; forced = true; v }
-  def ifForced(f: V => Unit): Unit = if (forced) f(value)
+  // not `this`: the lazy val holds the cell's monitor for the whole
+  // computation, and an eviction hook must never wait on that
+  private val lock = new Object
+  private var forced = false
+  private var pending: Option[V => Unit] = None
+
+  lazy val value: V = {
+    val v = thunk
+    lock.synchronized { forced = true; pending }.foreach(f => f(v))
+    v
+  }
+
+  def release(f: V => Unit): Unit =
+    if (lock.synchronized { if (!forced) pending = Some(f); forced })
+      f(value)
 }

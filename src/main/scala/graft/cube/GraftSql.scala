@@ -810,8 +810,8 @@ object GraftSql {
     .empty[(String, String, Long, Seq[(String, String, String)]), SqlResult]
 
   /** observability (VERDICT r10 item 8): a cache nobody measures can't
-    * prove a dashboard workload actually hits it — the bench replays a
-    * routed query through sqlCached and reports these in its JSON */
+    * prove a dashboard workload actually hits it — the gated benchmark
+    * (perfbench) reports these as its cache hit ratio */
   private val cacheHits = new java.util.concurrent.atomic.AtomicLong(0L)
   private val cacheMisses = new java.util.concurrent.atomic.AtomicLong(0L)
   private val cacheEvictions = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -56,10 +56,11 @@ object GraftTool {
 
   private def session(): SparkSession = {
     val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
+        s"local[${graft.GraftSession.cpus}]"))
       .appName("graft-tool")
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+        graft.GraftSession.cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -212,31 +212,15 @@ object QueryLog {
     // the compaction swap is two renames with no listing between — a
     // reader that planned against the pre-swap listing can hit a
     // vanished part file (the same documented window the serving layer
-    // masks for cube storage, QueryService.isSwapWindowRead). ONE
+    // masks for cube storage, QueryService.vanishedUnder). ONE
     // retry against a fresh listing; a second failure is a real
     // storage problem and propagates.
     try read()
     catch {
-      case e: Throwable if isSwapRead(e, dir) =>
+      case e: Throwable if QueryService.vanishedUnder(e, dir) =>
         Thread.sleep(150)
         read()
     }
-  }
-
-  /** a read failure whose cause chain names a vanished file under THIS
-    * log dir — the compaction-swap reader window, nothing else */
-  private def isSwapRead(e: Throwable, dir: String): Boolean = {
-    var c: Throwable = e
-    var hops = 0
-    while (c != null && hops < 16) {
-      val msg = Option(c.getMessage).getOrElse("")
-      val vanished = c.isInstanceOf[java.io.FileNotFoundException] ||
-        msg.contains("FAILED_READ_FILE") || msg.contains("PATH_NOT_FOUND")
-      if (vanished && msg.contains(dir)) return true
-      c = if (c.getCause eq c) null else c.getCause
-      hops += 1
-    }
-    false
   }
 
   /** Routed dim-sets for `cube` from the persisted log, newest first —

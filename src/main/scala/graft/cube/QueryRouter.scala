@@ -77,12 +77,6 @@ final case class RoutePlan(
   */
 object QueryRouter {
 
-  /** deployment kill-switch for the lightweight-scan fast path below
-    * (export GRAFT_ROUTE_LIGHT_COALESCE=off) — scale knob kept
-    * parameterised per the optimization-round rules; default ON */
-  private val LightCoalesce: Boolean =
-    sys.env.get("GRAFT_ROUTE_LIGHT_COALESCE").forall(_ != "off")
-
   /** open-range sentinels for one-sided derived time ranges: lexical
     * min/max of ISO days, so the string overlap math needs no special
     * cases — but residual-filter construction must NOT require them to
@@ -425,7 +419,7 @@ object QueryRouter {
     // flat-to-−34%, so only heavy-state queries keep the parallel agg
     val heavyMeasure = (q.measures.map(_._1) ++ p.extUsed.map(_.measure))
       .exists(m => cube.measure(m).heavyState)
-    if (LightCoalesce && knownRows && !heavyMeasure &&
+    if (knownRows && !heavyMeasure &&
         p.estRows <= QueryService.HeavyRowThreshold) {
       val target =
         (p.estRows / QueryService.PartitionSplitRows + 1).toInt

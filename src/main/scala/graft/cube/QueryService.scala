@@ -204,31 +204,24 @@ object QueryService {
     * to be invisible against any real query's latency */
   private val SwapRetryBackoffMs = 150L
 
-  /** a scan failure whose cause is a file/path under MANAGED cube
-    * storage that VANISHED between plan and read — the signature of a
-    * concurrent refresh or snapshot-rebuild swap (rename-aside retires
-    * the dirs the plan pinned). Walks the cause chain: Spark wraps the
-    * executor-side FileNotFoundException in task/stage/SparkException
-    * layers with the FAILED_READ_FILE condition; a plan-time listing
-    * that caught the absence window instead surfaces PATH_NOT_FOUND.
-    * The cube-root scoping keeps a permanently-missing SOURCE path (a
-    * misconfigured sf dir, a dropped pushdown table) from paying a
-    * pointless backoff + full duplicate execution: only managed dirs
-    * are swapped by lifecycle ops, so only they can heal on retry. */
-  private def isSwapWindowRead(e: Throwable): Boolean = {
-    val root = CubeManager.cubeRoot
-    var c: Throwable = e
-    var hops = 0
-    while (c != null && hops < 16) {
-      val msg = Option(c.getMessage).getOrElse("")
-      val vanished = c.isInstanceOf[java.io.FileNotFoundException] ||
-        msg.contains("FAILED_READ_FILE") || msg.contains("PATH_NOT_FOUND")
-      if (vanished && msg.contains(root)) return true
-      c = if (c.getCause eq c) null else c.getCause
-      hops += 1
-    }
-    false
-  }
+  /** A read failure whose cause chain names a file or path under
+    * `root` that VANISHED between plan and read — a concurrent swap
+    * retired the files the plan pinned: a FileNotFoundException,
+    * FAILED_READ_FILE.FILE_NOT_EXIST, or a plan-time PATH_NOT_FOUND.
+    * Bare FAILED_READ_FILE does NOT match: its other subclasses
+    * (CANNOT_READ_FILE_FOOTER, PARQUET_COLUMN_DATA_TYPE_MISMATCH) are
+    * corruption and schema faults a retry must never mask. Only the
+    * swapped root can heal on retry; a path missing elsewhere (a
+    * misconfigured sf dir) fails at once. */
+  private[graft] def vanishedUnder(e: Throwable, root: String): Boolean =
+    Iterator.iterate(e)(c => if (c.getCause eq c) null else c.getCause)
+      .takeWhile(_ != null).take(16).exists { c =>
+        val msg = Option(c.getMessage).getOrElse("")
+        val vanished = c.isInstanceOf[java.io.FileNotFoundException] ||
+          msg.contains("FAILED_READ_FILE.FILE_NOT_EXIST") ||
+          msg.contains("PATH_NOT_FOUND")
+        vanished && msg.contains(root)
+      }
 
   private def runImpl(spark: SparkSession, sfDir: String, sql: String,
           queryId: String, maxRows: Int, cached: Boolean,
@@ -295,7 +288,7 @@ object QueryService {
       val (r, trace, rows, pool, parts, limited) =
         try attempt()
         catch {
-          case e: Throwable if isSwapWindowRead(e) &&
+          case e: Throwable if vanishedUnder(e, CubeManager.cubeRoot) &&
               !timedOutIds.contains(queryId) &&
               !cancelledIds.contains(queryId) =>
             // a refresh / snapshot-rebuild swap moved committed dirs

@@ -81,7 +81,7 @@ object Dedup {
   private val shingleCache = new graft.BoundedMemo[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
     graft.LazyCell[DataFrame]](
-    ShingleCacheCap)(_.ifForced(_.unpersist(blocking = false)))
+    ShingleCacheCap)(_.release(_.unpersist(blocking = false)))
 
   private[graft] def shingleCacheSize: Int = shingleCache.size
 
@@ -253,7 +253,7 @@ object Dedup {
     (SparkSession,
      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
     graft.LazyCell[DataFrame]](BandCacheCap)(
-    _.ifForced(_.unpersist(blocking = false)))
+    _.release(_.unpersist(blocking = false)))
 
   private def cachedBandedBuckets(rows: DataFrame)
                                  (implicit spark: SparkSession): DataFrame =
@@ -346,7 +346,7 @@ object Dedup {
     (SparkSession,
      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Double),
     graft.LazyCell[DataFrame]](PairCacheCap)(
-    _.ifForced(_.unpersist(blocking = false)))
+    _.release(_.unpersist(blocking = false)))
 
   def cachedMinhashDupPairs(docs: DataFrame, minJaccard: Double)
                            (implicit spark: SparkSession): DataFrame =
@@ -423,7 +423,7 @@ object Dedup {
     (SparkSession,
      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
     graft.LazyCell[DataFrame]](SimBucketCacheCap)(
-    _.ifForced(_.unpersist(blocking = false)))
+    _.release(_.unpersist(blocking = false)))
 
   private def cachedSimhashBuckets(docs: DataFrame)
                                   (implicit spark: SparkSession): DataFrame =

@@ -134,7 +134,7 @@ object EmbeddingSearch {
     (org.apache.spark.sql.SparkSession,
      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Double, Int),
     graft.LazyCell[DataFrame]](PairCacheCap)(
-    _.ifForced(_.unpersist(blocking = false)))
+    _.release(_.unpersist(blocking = false)))
 
   def cachedCosineDupPairs(embs: DataFrame, minCos: Double,
                            blocks: Int = CosineBlocks)

@@ -41,7 +41,7 @@ object TextQueries extends QueryGroup {
     (org.apache.spark.sql.SparkSession,
      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
     graft.LazyCell[org.apache.spark.sql.DataFrame]](4)(
-    _.ifForced(_.unpersist(blocking = false)))
+    _.release(_.unpersist(blocking = false)))
 
   val queries: Seq[Q] = Seq(
 

@@ -18,15 +18,15 @@ import graft.cube._
   * spec races two member builds and proves from the phase trace that
   * ONLY the dictionary phases serialized; the cuboid phases (the bulk
   * of any real build) ran concurrently. The 10×-cardinality lease
-  * WAIT measurement lives in CubeScaleProbe's `contention` section. */
+  * WAIT measurement lives in `Probe cube`'s `contention` section. */
 class DictLeaseContentionSpec extends AnyFunSuite {
   import TestSpark._
 
-  // the SAME fixture CubeScaleProbe's contention_x10 measures at 10×
+  // the SAME fixture `Probe cube`'s contention_x10 measures at 10×
   // cardinality — shared so the pinned contract and the measured
   // shape can never drift apart
   private def doc(name: String): String =
-    CubeScaleProbe.contentionDoc(name, "controot")
+    Probe.Cube.contentionDoc(name, "controot")
 
   test("two shared-root member builds serialize ONLY their dictionary " +
       "phases; the cuboid phases overlap (the lease scopes the dict " +
@@ -43,7 +43,7 @@ class DictLeaseContentionSpec extends AnyFunSuite {
       // a dedicated 2-thread pool: on a 1-CPU runner the global EC
       // would run the two blocking builds one after the other and the
       // overlap assertion below would fail spuriously
-      val insts = CubeScaleProbe.raceTwo(
+      val insts = Probe.Cube.raceTwo(
         CubeManager.ensureDeclared(spark, sf, specs.head),
         CubeManager.ensureDeclared(spark, sf, specs.last), 300)
       assert(insts.map(_.cube.name).toSet == Set(a, b))
