@@ -3,7 +3,10 @@ package graft.cube
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.graftbridge.ScanBridge
+import org.apache.spark.sql.types.{StructType, TimestampType}
+
+import scala.jdk.CollectionConverters._
 
 /** A built cube on disk: parquet layout `<root>/<cube>/<segment>/
   * cuboid=<id>/` (reference: ParquetStorage.scala:1-34), plus the
@@ -44,6 +47,66 @@ final case class CubeInstance(
     val id = cube.cuboidId(c)
     cube.segments.map(s => rows.getOrElse((s.name, id), 0L)).sum
   }
+
+  /** committed parquet schema per read shape (`cuboid=<id>` or
+    * `snapshots/<lookup>`). Spark's Parquet schema inference runs a
+    * 1-task job per read; the schema of a committed layout is fixed for
+    * the life of this instance, and CubeManager builds a new instance on
+    * every buildId drift (build, refresh, merge, foreign commit), so the
+    * memo never outlives the layout it describes. Per instance on
+    * purpose: never keyed globally, never persisted into meta. */
+  @transient private lazy val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private[graft] def memoizedShapes: Set[String] =
+    schemas.keySet.asScala.toSet
+
+  /** The first read of a shape infers its schema; every later read
+    * passes it and runs no job. Files are still listed per read, so a
+    * swapped or vanished dir surfaces exactly as without the memo. */
+  private def readCommitted(spark: SparkSession, shape: String,
+                            paths: Seq[String]): DataFrame =
+    Option(schemas.get(shape)) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None =>
+        val df = spark.read.parquet(paths: _*)
+        schemas.putIfAbsent(shape, df.schema)
+        df
+    }
+
+  /** Cuboid `id` over `segs`: one relation over every segment dir (at
+    * thousands of segments one file listing and one scan node, not a
+    * thousand-way union), or one per segment when shard-partitioned
+    * (multi-root reads break partition discovery). With a supplied schema a dir that exists
+    * but holds no data files would read as empty, so a segment the
+    * committed stats count as non-empty must list data files — checked
+    * on the listing the read already made. */
+  def readCuboid(spark: SparkSession, id: Long, segs: Seq[String],
+                 sharded: Boolean): DataFrame = {
+    val shape = s"cuboid=$id"
+    val paths = segs.map(cuboidPath(_, id))
+    val df =
+      if (sharded)
+        paths.map(p => readCommitted(spark, shape, Seq(p)))
+          .reduce(_ unionByName _)
+      else readCommitted(spark, shape, paths)
+    val base = new Path(s"$root/${cube.name}")
+    val prefix = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(base).toUri.getPath + "/"
+    val listed = ScanBridge.scanFiles(df).iterator
+      .map(f => new Path(f).toUri.getPath)
+      .filter(_.startsWith(prefix))
+      .map(_.substring(prefix.length).takeWhile(_ != '/')).toSet
+    segs.find(seg => rows.getOrElse((seg, id), 0L) > 0 && !listed(seg))
+      .foreach(seg => throw new IllegalStateException(
+        s"committed cuboid dir ${cuboidPath(seg, id)} lists no data " +
+          s"files but the committed stats count ${rows((seg, id))} rows"))
+    df
+  }
+
+  def readSnapshot(spark: SparkSession, lookup: String): DataFrame =
+    readCommitted(spark, s"snapshots/$lookup",
+      Seq(Snapshot.path(root, lookup)))
 }
 
 /** Layered spanning-tree cuboid build (reference: CubeBuildJob.java:

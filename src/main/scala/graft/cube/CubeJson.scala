@@ -1093,18 +1093,18 @@ object CubeJson {
     // stats (a damaged dir's ranges could wrongly prune — skip it,
     // the audit keeps flagging), and full coverage short-circuits
     // before the lease (no buildId churn on the steady-state run —
-    // collect with no eligible dims reads one parquet footer and
-    // launches no job, so an all-float cube retries harmlessly).
+    // collect with no eligible dims runs only 1-task schema-inference
+    // jobs and scans no rows, so an all-float cube retries harmlessly).
     {
       val cur0 = CubeMeta.load(spark, toCubeDef(spec), root).map(_.inst)
       val missing0 = cur0.toSeq.flatMap { c =>
         val covered = c.dimRanges.keySet.map(_._1)
         c.cube.segments.filterNot(s => covered(s.name))
       }
-      // the eligibility probe (one footer read, no job, no lease)
-      // keeps a cube that can NEVER reach coverage — every dim
-      // float/double/binary — from acquiring the build lease on every
-      // scheduled run forever
+      // the eligibility probe (one 1-task schema-inference job, no
+      // scan, no lease) keeps a cube that can NEVER reach coverage —
+      // every dim float/double/binary — from acquiring the build
+      // lease on every scheduled run forever
       if (missing0.nonEmpty &&
           cur0.exists(c => DimRanges.anyEligible(spark, c))) {
         BuildLease.withLease(spark, root,

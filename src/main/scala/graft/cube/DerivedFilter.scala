@@ -169,7 +169,7 @@ object DerivedFilterTranslator {
     if (hit != null) hit
     else {
       val v = scala.util.Try {
-        val snap = spark.read.parquet(snapPath)
+        val snap = inst.readSnapshot(spark, dd.lookup)
         // re-target the attribute at the snapshot's own column name
         // (the derived name IS the lookup column name; qualifiers and
         // exprIds from the query's plan would not resolve here)

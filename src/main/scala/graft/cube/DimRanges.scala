@@ -94,7 +94,8 @@ object DimRanges {
     }
 
   /** cheap schema-only probe: can THIS instance ever collect ranges?
-    * One parquet footer read (first segment's base cuboid), no job.
+    * One schema inference over the first segment's base cuboid: Spark
+    * reads one footer in a 1-task job, and scans no rows.
     * False ⇔ no dim is eligible (or nothing is readable) — permanent
     * until the def changes, so callers may skip expensive machinery. */
   def anyEligible(spark: SparkSession, inst: CubeInstance): Boolean =

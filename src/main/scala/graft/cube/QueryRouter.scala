@@ -362,18 +362,9 @@ object QueryRouter {
     // ── scan: empty overlap short-circuits to an empty result with the
     // right schema (read the cuboid, keep no rows) instead of a
     // zero-path read, which throws.
-    val paths =
-      if (p.emptyScan) cube.segments.map(s => inst.cuboidPath(s.name, id))
-      else p.overlapping.map(s => inst.cuboidPath(s.name, id))
-    // Shard-partitioned cuboid dirs need one read per segment root
-    // (multi-root reads break partition discovery); everything else
-    // reads all segment paths in ONE relation — at thousands of
-    // segments that is one file listing and one scan node, not a
-    // thousand-way union.
-    val sharded = cube.shardBy.exists(p.chosen.contains)
-    var df =
-      if (sharded) paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      else spark.read.parquet(paths: _*)
+    val segs = (if (p.emptyScan) cube.segments else p.overlapping).map(_.name)
+    var df = inst.readCuboid(spark, id, segs,
+      sharded = cube.shardBy.exists(p.chosen.contains))
     if (p.emptyScan) df = df.filter(lit(false))
     p.residual.foreach { case (_, pred) => df = df.filter(pred) }
     // translated host-dim prune BEFORE the snapshot attach: lands on
@@ -387,8 +378,7 @@ object QueryRouter {
     // the join is 1:1). The query filter applies AFTER the attach so
     // lookup-attribute predicates resolve.
     (p.derivedUsed ++ p.filterDerived).distinct.foreach { dd =>
-      val snap = spark.read
-        .parquet(Snapshot.path(inst.root, dd.lookup))
+      val snap = inst.readSnapshot(spark, dd.lookup)
         .select(col(dd.host), col(dd.name))
       df = df.join(broadcast(snap), Seq(dd.host), "left")
     }

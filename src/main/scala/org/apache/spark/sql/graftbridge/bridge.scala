@@ -62,14 +62,21 @@ object DatasetBridge {
   * from regardless of persist state. */
 object ScanBridge {
   def scanRootPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    fsRelations(df).flatMap(_.location.rootPaths.map(_.toString))
+
+  /** the data files the relations' existing listings hold (no new
+    * listing) */
+  def scanFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    fsRelations(df).flatMap(_.location.inputFiles.toSeq)
+
+  private def fsRelations(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.HadoopFsRelation] =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
+        lr.relation
+    }.collect {
+      case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation => fs
+    }
 }
 
 /** Session identity without pinning: `sessionUUID` is defined on the
