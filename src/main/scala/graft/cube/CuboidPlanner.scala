@@ -353,8 +353,9 @@ object CuboidPlanner {
   /** Model-evolution advice from ROUTING MISSES (the other half of the
     * reference Cube Planner's query-history diet: routed shapes tune
     * the cuboid set above, PUSHDOWN shapes are the evidence the model
-    * itself is missing a dimension). Input is
-    * `QueryRouter.QueryStats.misses(cube)`; output is each unmatched
+    * itself is missing a dimension). Input is the served record's
+    * miss shapes — `QueryLog.missesOf(QueryLog.recentRows, cube)` in
+    * this JVM, `QueryLog.missSets` across restarts; output is each unmatched
     * dim ranked by demand. The remedy is deliberately NOT automated —
     * adding a rowkey dim is a CubeDef change plus rebuild, an operator
     * decision — which is why this surfaces advice instead of feeding
@@ -369,7 +370,7 @@ object CuboidPlanner {
     * from the parquet QueryLog a previous process persisted
     * (reference: the cube planner "phase 2" feeds on externally
     * reported query metrics, metrics-reporter-* modules) rather than
-    * this JVM's in-memory QueryStats. */
+    * this JVM's in-memory ring (`QueryLog.recent`). */
   def recommendFromStore(spark: org.apache.spark.sql.SparkSession,
                          logDir: String, flat: DataFrame,
                          base: Set[String], cube: String,

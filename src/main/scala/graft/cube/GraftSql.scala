@@ -919,9 +919,9 @@ object GraftSql {
       case Some(hit) =>
         cacheHits.incrementAndGet()
         // a hit is still a served query SHAPE: replay its route into
-        // the usage log so the planner loop counts cached workload
-        // (and the thread-local lets QueryService's persisted QueryLog
-        // row carry the hit's cube/dims too)
+        // the thread's routing handoff so the served record carries
+        // the hit's cube/dims and the planner loop counts cached
+        // workload
         hit.route.foreach { case (c, d) => QueryRouter.QueryStats.record(c, d) }
         hit.copy(fromCache = true)
       case None =>

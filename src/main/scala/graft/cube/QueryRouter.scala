@@ -247,47 +247,23 @@ object QueryRouter {
       filterDerived, extUsed, realGroup, estRows, needed, hostPrune))
   }
 
-  /** Bounded per-JVM query-shape log (reference: Kylin's query metrics
-    * feeding cube planner "phase 2" — CuboidRecommendAlgorithm
-    * optimizes the materialized set from what users actually asked).
-    * Every EXECUTED route records the cuboid-relevant dim set it
-    * needed; `CuboidPlanner.recommendFromLog(flat, base, log(...))`
-    * then closes the loop from workload to materialization. */
+  /** This thread's routing handoff to the serving layer (reference:
+    * Kylin's query metrics feeding cube planner "phase 2" —
+    * CuboidRecommendAlgorithm optimizes the materialized set from what
+    * users actually asked). The route that EXECUTED records the
+    * cuboid-relevant dim set it needed, and the routing pass records
+    * the cubes it could not match; QueryService and the JDBC guard run
+    * routing synchronously on their handler thread and `takeForThread`
+    * hands both to `QueryLog.served`, the one served-query record. */
   object QueryStats {
-    val Cap = 1024
-    private val buf =
-      scala.collection.mutable.ArrayDeque.empty[(String, Set[String])]
-    // what THIS thread's last routed execution recorded — QueryService
-    // runs routing synchronously on its handler thread and reads this
-    // to attach (cube, dims) to the persisted QueryLog row
     private val lastRec: ThreadLocal[Option[(String, Set[String])]] =
       ThreadLocal.withInitial(() => None)
-    def record(cube: String, dims: Set[String]): Unit = {
+    def record(cube: String, dims: Set[String]): Unit =
       lastRec.set(Some((cube, dims)))
-      synchronized {
-        buf.append((cube, dims))
-        while (buf.size > Cap) { buf.removeHead(); () }
-      }
-    }
-    /** consume the thread's last routed (cube, dims); clears on read */
-    def takeLastForThread(): Option[(String, Set[String])] = {
-      val v = lastRec.get(); lastRec.set(None); v
-    }
     /** observe without clearing — for a caller (the result cache) that
       * must not steal the record from the consumer downstream */
     def peekLastForThread(): Option[(String, Set[String])] = lastRec.get()
-    def log(cube: String): Seq[Set[String]] = synchronized {
-      buf.collect { case (c, d) if c == cube => d }.toSeq
-    }
 
-    /** Bounded MISS log — queries a cube could not route because a
-      * grouped dim is outside its rowkey. The reference's Cube Planner
-      * consumes pushdown query history exactly this way: routed shapes
-      * tune the cuboid set (recommendFromLog), un-routable shapes are
-      * the evidence for evolving the MODEL itself
-      * (CuboidPlanner.adviseModel). (cube, neededDims, unmatchedDims). */
-    private val missBuf = scala.collection.mutable.ArrayDeque
-      .empty[(String, Set[String], Set[String])]
     // per-routing-pass dedup: one query is attempted against EVERY
     // candidate realization of its view (hybrid + alternates often
     // share a cube name), and each attempt hits the same unmatched
@@ -298,43 +274,28 @@ object QueryRouter {
       : ThreadLocal[scala.collection.mutable.Set[(String, Set[String])]] =
       ThreadLocal.withInitial(() =>
         scala.collection.mutable.Set.empty[(String, Set[String])])
-    // this thread's CURRENT routing pass's misses — the serving layer
-    // reads these after the query resolves to persist pushdown-shape
-    // history (reference: pushdown query metrics feed the planner's
-    // model advice); same lifecycle as passSeen
+    // this thread's CURRENT routing pass's misses (cube, needed,
+    // unmatched) — queries a cube could not route because a grouped
+    // dim is outside its rowkey; same lifecycle as passSeen
     private val passMisses
-      : ThreadLocal[scala.collection.mutable.ArrayBuffer[
-        (String, Set[String], Set[String])]] =
-      ThreadLocal.withInitial(() => scala.collection.mutable
-        .ArrayBuffer.empty[(String, Set[String], Set[String])])
+      : ThreadLocal[scala.collection.mutable.ArrayBuffer[QueryLog.Miss]] =
+      ThreadLocal.withInitial(() =>
+        scala.collection.mutable.ArrayBuffer.empty[QueryLog.Miss])
     private[graft] def beginRoutingPass(): Unit = {
       passSeen.get().clear(); passMisses.get().clear(); ()
     }
-    /** consume the thread's current-pass misses (cube, needed,
-      * unmatched); clears on read. The serving layer persists these
-      * only for queries that ultimately FELL BACK — a miss against one
-      * realization of a view another realization then served is not
-      * model-evolution evidence. */
-    def takeMissesForThread(): Seq[(String, Set[String], Set[String])] = {
-      val v = passMisses.get().toSeq; passMisses.get().clear(); v
-    }
     def recordMiss(cube: String, needed: Set[String],
-                   unmatched: Set[String]): Unit = {
-      if (!passSeen.get().add((cube, unmatched))) return
-      passMisses.get() += ((cube, needed, unmatched))
-      synchronized {
-        missBuf.append((cube, needed, unmatched))
-        while (missBuf.size > Cap) { missBuf.removeHead(); () }
-      }
-    }
-    /** (neededDims, unmatchedDims) per miss against `cube` */
-    def misses(cube: String): Seq[(Set[String], Set[String])] =
-      synchronized {
-        missBuf.collect { case (c, n, u) if c == cube => (n, u) }.toSeq
-      }
+                   unmatched: Set[String]): Unit =
+      if (passSeen.get().add((cube, unmatched)))
+        passMisses.get() += QueryLog.Miss(cube, needed, unmatched)
 
-    private[graft] def clear(): Unit = synchronized {
-      buf.clear(); missBuf.clear(); ()
+    /** consume the thread's last executed route (cube, dims) and the
+      * current pass's misses; clears both, so one query's handoff never
+      * leaks into the next query on this handler thread */
+    def takeForThread(): (Option[(String, Set[String])], Seq[QueryLog.Miss]) = {
+      val route = lastRec.get(); lastRec.set(None)
+      val misses = passMisses.get().toSeq; passMisses.get().clear()
+      (route, misses)
     }
   }
 
@@ -354,8 +315,8 @@ object QueryRouter {
   private def execute(spark: SparkSession, inst: CubeInstance, q: CubeQuery,
                       p: RoutePlan, present: Boolean): Routed = {
     val cube = inst.cube
-    // usage log feeds the planner: record only EXECUTED routes (one
-    // entry per answered query, not one per costed candidate)
+    // the served record feeds the planner: hand off only EXECUTED
+    // routes (one per answered query, not one per costed candidate)
     QueryStats.record(cube.name, p.needed)
     val id = cube.cuboidId(p.chosen)
 

@@ -51,8 +51,8 @@ import org.apache.spark.sql.graftbridge.ConfBridge
   *    and surfaces a typed QueryTimedOut; concurrent queries run on.
   *  - per-query scan metrics (QueryMetricUtils parity): scanRows /
   *    scanBytes summed over the executed plan's file scans, carried on
-  *    the returned `Served` and appended to QueryStats — actuals, not
-  *    estimates, for monitoring and the usage-driven planner loop.
+  *    the returned `Served` and recorded by `QueryLog.served` — actuals,
+  *    not estimates, for monitoring and the usage-driven planner loop.
   *
   * `cancel(queryId)` kills every job of a served query by its group;
   * running tasks are interrupted (interruptOnCancel), so even a task
@@ -202,7 +202,7 @@ object QueryService {
   /** backoff before the one swap-window retry — longer than the
     * two-rename absence window by orders of magnitude, short enough
     * to be invisible against any real query's latency */
-  private val SwapRetryBackoffMs = 150L
+  private[graft] val SwapRetryBackoffMs = 150L
 
   /** A read failure whose cause chain names a file or path under
     * `root` that VANISHED between plan and read — a concurrent swap
@@ -227,9 +227,9 @@ object QueryService {
           queryId: String, maxRows: Int, cached: Boolean,
           timeout: Duration): Served = {
     require(maxRows > 0, "maxRows must be positive")
-    // drop any stale route record a prior (failed) run left on this
-    // thread — the QueryLog row below must describe THIS query
-    QueryRouter.QueryStats.takeLastForThread(): Unit
+    // drop any stale routing handoff a prior (failed) run left on this
+    // thread — the served record below must describe THIS query
+    QueryRouter.QueryStats.takeForThread(): Unit
     val deadline = effectiveTimeout(spark, timeout)
     val sc = spark.sparkContext
     activeIds.add(queryId)
@@ -250,7 +250,7 @@ object QueryService {
       }, deadline.toMillis, TimeUnit.MILLISECONDS))
     try {
       // the RETRYABLE section: route + collect only. The recording
-      // tail (ServedLog/QueryLog, whose due-flush does its own parquet
+      // tail (QueryLog.served, whose due-flush does its own parquet
       // I/O) runs ONCE, after the retry block — a vanished-file error
       // from the log store must never re-execute an already-successful
       // query and double-record it.
@@ -301,9 +301,6 @@ object QueryService {
             // (the reference's serving path reloads metadata on the
             // same signal). ONE retry only — a second vanished-file
             // failure is a real storage problem and must propagate.
-            // (The failed pass's route landed in QueryStats' global
-            // demand log; one duplicate sample per rare retry is
-            // noise the bounded log absorbs.)
             try Thread.sleep(SwapRetryBackoffMs)
             catch {
               case _: InterruptedException =>
@@ -323,28 +320,11 @@ object QueryService {
       val (scanRows, scanBytes) =
         if (r.fromCache) (0L, 0L)
         else scanMetrics(limited.queryExecution.executedPlan)
-      ServedLog.record(queryId, r.via, scanRows, scanBytes,
-        if (r.routed) None else GraftSql.summarizeTrace(trace))
-      // persisted metrics (reference: metrics-reporter-* parity): the
-      // route that answered this query recorded its (cube, dims) on
-      // this thread; a cache hit routes nothing and logs without them
-      val routeInfo = QueryRouter.QueryStats.takeLastForThread()
-      // consumed unconditionally so one query's misses never leak
-      // into the next query on this handler thread
-      val missInfo = QueryRouter.QueryStats.takeMissesForThread()
-      QueryLog.configuredDir(spark).foreach { dir =>
-        QueryLog.record(spark, dir, queryId, r.via, routeInfo.map(_._1),
-          routeInfo.map(_._2), scanRows, scanBytes)
-        // pushdown-shape history (reference: pushdown query metrics):
-        // a query that ultimately FELL BACK persists what each
-        // realization could not match — the evidence adviseModel
-        // ranks for evolving the model. A miss against one
-        // realization that another then served is not recorded.
-        if (!r.routed) missInfo.foreach { case (c, needed, unmatched) =>
-          QueryLog.record(spark, dir, queryId, "miss", Some(c),
-            Some(needed), 0L, 0L, unmatched = Some(unmatched))
-        }
-      }
+      // the route that answered this query handed its (cube, dims)
+      // off on this thread; a fallback carries its traced reason and
+      // the routing pass's misses instead
+      QueryLog.served(spark, queryId, QueryLog.Route.take(r.routed, r.via,
+        GraftSql.summarizeTrace(trace)), scanRows, scanBytes)
       Served(queryId, rows, r.routed, r.via, pool, parts, scanRows,
         scanBytes, r.fromCache)
     } catch {
@@ -372,29 +352,6 @@ object QueryService {
       sc.setLocalProperty("spark.scheduler.pool", null)
       sc.clearJobGroup()
     }
-  }
-
-  /** Bounded per-JVM log of served-query scan actuals (the reference's
-    * query metrics, QueryMetricUtils → QueryContext — fed to
-    * monitoring; QueryRouter.QueryStats stays the planner loop's
-    * dim-set log, this is the operator-facing side). */
-  object ServedLog {
-    val Cap = 1024
-    private val buf = scala.collection.mutable.ArrayDeque
-      .empty[(String, String, Long, Long, Option[String])]
-    def record(queryId: String, via: String, scanRows: Long,
-               scanBytes: Long,
-               reason: Option[String] = None): Unit = synchronized {
-      buf.append((queryId, via, scanRows, scanBytes, reason))
-      while (buf.size > Cap) { buf.removeHead(); () }
-    }
-    /** (queryId, via, scanRows, scanBytes, pushdown-reason), oldest
-      * first; the reason is the acceleration rule's traced refusal
-      * summary for statements that touched a cube view yet served
-      * from pushdown (reference: BadQueryDetector's per-query entry) */
-    def recent: Seq[(String, String, Long, Long, Option[String])] =
-      synchronized(buf.toSeq)
-    private[graft] def clear(): Unit = synchronized { buf.clear(); () }
   }
 
   /** kill every job of a served query; interruptOnCancel interrupts

@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.cube.{GraftSql, QueryService}
+import graft.cube.{GraftSql, QueryLog, QueryRouter, QueryService}
 
 /** The reference applies its serving contract to EVERY consumed query
   * at a single consumption point — ResultPlan.scala:60-123 picks the
@@ -88,35 +88,16 @@ final case class ServeGuardRule(session: SparkSession)
         // pool per the reference (ResultPlan.scala:66): the
         // acceleration rule ran just before us in this post-hoc batch
         // and recorded whether it swapped in a routed plan (and, via
-        // QueryStats, WHICH cube/dims answered) — embed both so the
-        // executed statement can feed the same metrics spine as the
-        // programmatic QueryService path
+        // QueryStats, WHICH cube/dims answered) — embed the route so
+        // the executed statement records the same served-query record
+        // as the programmatic QueryService path
         val (routed, est, why) =
           GraftSql.takeAccelOutcome().getOrElse((false, None, None))
-        val route0 = graft.cube.QueryRouter.QueryStats.takeLastForThread()
-        val route =
-          if (routed) route0.map { case (c, d) => (c, d.toSeq.sorted) }
-          else None
-        // consume the routing pass's misses UNCONDITIONALLY (they must
-        // not leak into the next statement on this thread); embed them
-        // only for statements that fell back — the same
-        // pushdown-history rule as QueryService.run (a miss against a
-        // realization another realization then served is not model
-        // evidence)
-        val misses0 = graft.cube.QueryRouter.QueryStats
-          .takeMissesForThread()
-        val misses =
-          if (routed) Nil
-          else misses0.map { case (c, n, u) =>
-            (c, n.toSeq.sorted, u.toSeq.sorted) }
-        val via = route.map(r => s"cube:${r._1}")
+        val via = QueryRouter.QueryStats.peekLastForThread()
+          .filter(_ => routed).map(r => s"cube:${r._1}")
           .getOrElse(if (routed) "cube" else "pushdown")
-        val pool = QueryService.poolFor(routed, est)
-        // the refusal reason the acceleration rule traced (None when
-        // routed, or when the plan never touched a cube view) rides
-        // to the exec so the served log can answer "why pushdown?"
-        ServeGuard(cap, timeoutSec, pool, via, route,
-          if (routed) None else why, misses, stripped)
+        ServeGuard(cap, timeoutSec, QueryService.poolFor(routed, est),
+          QueryLog.Route.take(routed, via, why), stripped)
     }
   }
 
@@ -128,10 +109,7 @@ final case class ServeGuardRule(session: SparkSession)
   * cap/timeout/pool". Pass-through schema; a barrier to nothing the
   * root needs (its child is the fully optimized query). */
 final case class ServeGuard(cap: Long, timeoutSec: Long, pool: String,
-                            via: String,
-                            route: Option[(String, Seq[String])],
-                            reason: Option[String],
-                            misses: Seq[(String, Seq[String], Seq[String])],
+                            route: QueryLog.Route,
                             child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
@@ -141,10 +119,8 @@ final case class ServeGuard(cap: Long, timeoutSec: Long, pool: String,
 
 object ServeGuardStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ServeGuard(cap, timeoutSec, pool, via, route, reason, misses,
-                    child) =>
-      ServeGuardExec(cap, timeoutSec, pool, via, route, reason, misses,
-        planLater(child)) :: Nil
+    case ServeGuard(cap, timeoutSec, pool, route, child) =>
+      ServeGuardExec(cap, timeoutSec, pool, route, planLater(child)) :: Nil
     case _ => Nil
   }
 }
@@ -179,11 +155,7 @@ final class ServeGuardColumnarRule
   * child under the statement's job group with the deadline armed and
   * takes at most cap+1 rows — refusal, never silent truncation. */
 final case class ServeGuardExec(cap: Long, timeoutSec: Long, pool: String,
-                                via: String,
-                                route: Option[(String, Seq[String])],
-                                reason: Option[String],
-                                misses: Seq[(String, Seq[String],
-                                  Seq[String])],
+                                route: QueryLog.Route,
                                 child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def outputOrdering: Seq[SortOrder] = child.outputOrdering
@@ -257,26 +229,12 @@ final case class ServeGuardExec(cap: Long, timeoutSec: Long, pool: String,
       if (timedOut.get())
         throw new QueryService.QueryTimedOut(group,
           Duration(timeoutSec, TimeUnit.SECONDS), null)
-      // a JDBC-served statement feeds the SAME metrics spine as the
-      // programmatic path (QueryMetricUtils parity): scan actuals from
-      // the executed child into ServedLog, and — when the session has
-      // opted into persistence — the parquet QueryLog with the route
-      // the acceleration rule embedded at analysis
+      // a JDBC-served statement records the SAME served-query record
+      // as the programmatic path (QueryMetricUtils parity): scan
+      // actuals from the executed child, with the route the
+      // acceleration rule embedded at analysis
       val (scanRows, scanBytes) = QueryService.scanMetrics(child)
-      QueryService.ServedLog.record(group, via, scanRows, scanBytes,
-        reason)
-      graft.cube.QueryLog.configuredDir(session).foreach { dir =>
-        graft.cube.QueryLog.record(session, dir, group, via,
-          route.map(_._1), route.map(_._2.toSet), scanRows, scanBytes)
-        // pushdown-shape history, same rule as QueryService.run: the
-        // misses the acceleration rule embedded at analysis persist
-        // only for statements that fell back
-        misses.foreach { case (c, needed, unmatched) =>
-          graft.cube.QueryLog.record(session, dir, group, "miss",
-            Some(c), Some(needed.toSet), 0L, 0L,
-            unmatched = Some(unmatched.toSet))
-        }
-      }
+      QueryLog.served(session, group, route, scanRows, scanBytes)
       out
     } catch {
       case e: Throwable

@@ -297,16 +297,19 @@ class CuboidPlannerSpec extends AnyFunSuite {
   test("executed routes land in the usage log and feed the planner") {
     // Kylin's query-metrics → cube-planner-phase-2 loop: real routed
     // queries record the dim sets they needed, and the planner can
-    // recommend straight from that log
-    QueryRouter.QueryStats.clear()
-    val r1 = GraftSql.sqlVia(spark, sf,
+    // recommend straight from that log (the served-query ring, read
+    // through the same row projection as the persisted log)
+    QueryLog.clearRecent()
+    val r1 = QueryService.run(spark, sf,
       """SELECT o_orderstatus, count(*) AS n FROM graft_star
-        |GROUP BY o_orderstatus""".stripMargin)
-    val r2 = GraftSql.sqlVia(spark, sf,
+        |GROUP BY o_orderstatus""".stripMargin,
+      queryId = "cp-usage-1", cached = false)
+    val r2 = QueryService.run(spark, sf,
       """SELECT n_name, sum(l_quantity) AS q FROM graft_star
-        |WHERE r_name = 'ASIA' GROUP BY n_name""".stripMargin)
+        |WHERE r_name = 'ASIA' GROUP BY n_name""".stripMargin,
+      queryId = "cp-usage-2", cached = false)
     assert(r1.routed && r2.routed)
-    val log = QueryRouter.QueryStats.log("star")
+    val log = QueryLog.routedOf(QueryLog.recentRows, "star").map(_._1)
     assert(log.contains(Set("o_orderstatus")), s"log: $log")
     assert(log.contains(Set("n_name", "r_name")), s"log: $log")
     // the loop closes: the logged shapes drive a recommendation that
@@ -324,18 +327,20 @@ class CuboidPlannerSpec extends AnyFunSuite {
     // the other half of the planner's query-history diet: shapes the
     // cube could NOT route (a grouped dim outside the rowkey) are the
     // evidence for evolving the model, ranked by demand
-    QueryRouter.QueryStats.clear()
+    QueryLog.clearRecent()
     (1 to 2).foreach { i =>
-      val r = GraftSql.sqlVia(spark, sf,
+      val r = QueryService.run(spark, sf,
         s"""SELECT l_quantity, count(*) AS n$i FROM graft_star
-           |GROUP BY l_quantity""".stripMargin)
+           |GROUP BY l_quantity""".stripMargin,
+        queryId = s"cp-miss-$i", cached = false)
       assert(!r.routed)
     }
-    val r3 = GraftSql.sqlVia(spark, sf,
+    val r3 = QueryService.run(spark, sf,
       """SELECT l_linenumber, count(*) AS n FROM graft_star
-        |GROUP BY l_linenumber""".stripMargin)
+        |GROUP BY l_linenumber""".stripMargin,
+      queryId = "cp-miss-3", cached = false)
     assert(!r3.routed)
-    val misses = QueryRouter.QueryStats.misses("star")
+    val misses = QueryLog.missesOf(QueryLog.recentRows, "star")
     assert(misses.nonEmpty, "unroutable dims must land in the miss log")
     val advice = CuboidPlanner.adviseModel(misses)
     assert(advice.nonEmpty && advice.head._1 == "l_quantity",
@@ -344,12 +349,13 @@ class CuboidPlannerSpec extends AnyFunSuite {
       .map(_._2).getOrElse(0),
       s"demand ranking must reflect query counts, got $advice")
     // routed queries record usage, never misses
-    QueryRouter.QueryStats.clear()
-    val ok = GraftSql.sqlVia(spark, sf,
+    QueryLog.clearRecent()
+    val ok = QueryService.run(spark, sf,
       """SELECT o_orderstatus, count(*) AS n FROM graft_star
-        |GROUP BY o_orderstatus""".stripMargin)
+        |GROUP BY o_orderstatus""".stripMargin,
+      queryId = "cp-miss-ok", cached = false)
     assert(ok.routed)
-    assert(QueryRouter.QueryStats.misses("star").isEmpty)
+    assert(QueryLog.missesOf(QueryLog.recentRows, "star").isEmpty)
   }
 
   test("a logged query outside the base lattice costs a base scan, no crash") {

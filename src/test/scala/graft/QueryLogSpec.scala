@@ -10,8 +10,8 @@ import graft.cube._
 /** Persisted query metrics (VERDICT r12 missing #2; reference
   * metrics-reporter-hive / metrics-reporter-kafka + QueryMetricUtils):
   * the usage-driven planner loop must survive a serving-process
-  * restart — ServedLog/QueryStats are in-JVM buffers, QueryLog is the
-  * parquet record they feed. */
+  * restart — `QueryLog.recent` is the in-JVM ring, the parquet log is
+  * the same record persisted. */
 class QueryLogSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -22,7 +22,7 @@ class QueryLogSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-querylog").toString
     spark.conf.set(QueryLog.DirConf, dir)
     try {
-      QueryRouter.QueryStats.clear()
+      QueryLog.clearRecent()
       val s1 = QueryService.run(spark, sf,
         """SELECT o_orderstatus, count(*) AS n FROM graft_star
           |GROUP BY o_orderstatus""".stripMargin,
@@ -35,10 +35,9 @@ class QueryLogSpec extends AnyFunSuite {
       QueryLog.flush(spark, dir)
 
       // "restart": every in-JVM buffer gone, only the parquet log left
-      QueryRouter.QueryStats.clear()
-      QueryService.ServedLog.clear()
+      QueryLog.clearRecent()
       QueryLog.clearPending()
-      assert(QueryRouter.QueryStats.log("star").isEmpty)
+      assert(QueryLog.recent.isEmpty)
 
       val rows = QueryLog.load(spark, dir).collect()
       assert(rows.length == 2, s"expected 2 log rows, got ${rows.length}")
@@ -74,7 +73,7 @@ class QueryLogSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-querylog-miss").toString
     spark.conf.set(QueryLog.DirConf, dir)
     try {
-      QueryRouter.QueryStats.clear()
+      QueryLog.clearRecent()
       // l_quantity is outside the star rowkey — unroutable, falls back
       val s = QueryService.run(spark, sf,
         """SELECT l_quantity, count(*) AS n FROM graft_star
@@ -91,8 +90,7 @@ class QueryLogSpec extends AnyFunSuite {
       QueryLog.flush(spark, dir)
 
       // "restart": only the parquet log survives
-      QueryRouter.QueryStats.clear()
-      QueryService.ServedLog.clear()
+      QueryLog.clearRecent()
       QueryLog.clearPending()
 
       val misses = QueryLog.missSets(spark, dir, "star")
@@ -120,7 +118,7 @@ class QueryLogSpec extends AnyFunSuite {
     GraftSql.registerViews(spark, sf)
     CubeManager.ensureBuilt(spark, sf)
     GraftSql.clearResultCache()
-    QueryRouter.QueryStats.clear()
+    QueryLog.clearRecent()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-querylog-hit").toString
     spark.conf.set(QueryLog.DirConf, dir)
@@ -133,8 +131,8 @@ class QueryLogSpec extends AnyFunSuite {
       assert(!miss.fromCache && hit.fromCache)
       // the planner's workload log counts the cached shape twice —
       // a hit is still a served query
-      val shapes = QueryRouter.QueryStats.log("star")
-        .count(_ == Set("o_orderstatus", "l_returnflag"))
+      val shapes = QueryLog.routedOf(QueryLog.recentRows, "star")
+        .count(_._1 == Set("o_orderstatus", "l_returnflag"))
       assert(shapes >= 2, s"cached workload must count, got $shapes")
       QueryLog.flush(spark, dir)
       val row = QueryLog.load(spark, dir)
@@ -152,6 +150,102 @@ class QueryLogSpec extends AnyFunSuite {
     }
   }
 
+  test("each served query leaves exactly one record; a direct route " +
+      "leaves none") {
+    GraftSql.registerViews(spark, sf)
+    CubeManager.ensureBuilt(spark, sf)
+    GraftSql.clearResultCache()
+    QueryLog.clearRecent()
+    // a route run outside a serving entry point records nothing
+    val direct = GraftSql.sqlVia(spark, sf,
+      """SELECT o_orderstatus, count(*) AS n FROM graft_star
+        |GROUP BY o_orderstatus""".stripMargin)
+    assert(direct.routed)
+    assert(QueryLog.recent.isEmpty, s"got ${QueryLog.recent}")
+
+    val q = """SELECT c_mktsegment, l_returnflag, count(*) AS n
+              |FROM graft_star GROUP BY c_mktsegment, l_returnflag"""
+      .stripMargin
+    val s = QueryService.run(spark, sf, q, queryId = "rec-1")
+    assert(s.routed && !s.fromCache)
+    assert(QueryLog.recent.map(_.queryId) == Seq("rec-1"))
+    val rec = QueryLog.recent.head
+    assert(rec.route.via == s.via)
+    assert(rec.route.executed ==
+      Some(("star", Set("c_mktsegment", "l_returnflag"))), s"got $rec")
+    assert(rec.scanRows == s.scanRows && rec.scanBytes == s.scanBytes &&
+      rec.scanRows > 0 && rec.scanBytes > 0, s"got $rec")
+    assert(rec.route.reason.isEmpty && rec.route.misses.isEmpty)
+
+    // a cache hit: 0/0 actuals and the route it replayed
+    val hit = QueryService.run(spark, sf, q, queryId = "rec-hit")
+    assert(hit.fromCache)
+    assert(QueryLog.recent.map(_.queryId) == Seq("rec-1", "rec-hit"))
+    val h = QueryLog.recent.last
+    assert(h.scanRows == 0L && h.scanBytes == 0L, s"got $h")
+    assert(h.route.executed == rec.route.executed, s"got $h")
+
+    // a fallback: its traced reason and its misses, no executed route
+    val fb = QueryService.run(spark, sf,
+      """SELECT l_quantity, count(*) AS n FROM graft_star
+        |GROUP BY l_quantity""".stripMargin,
+      queryId = "rec-fb", cached = false)
+    assert(!fb.routed)
+    assert(QueryLog.recent.map(_.queryId) ==
+      Seq("rec-1", "rec-hit", "rec-fb"))
+    val f = QueryLog.recent.last
+    assert(f.route.via == fb.via && f.route.executed.isEmpty, s"got $f")
+    assert(f.route.reason.exists(_.contains("l_quantity")), s"got $f")
+    assert(f.route.misses.nonEmpty && f.route.misses.forall(m =>
+      m.cube == "star" && m.unmatched == Set("l_quantity") &&
+        m.needed == Set("l_quantity")), s"got $f")
+  }
+
+  test("a fallback's reason round-trips through flush/load; a log " +
+      "written before the reason column reads it as null") {
+    import org.apache.spark.sql.functions.col
+    GraftSql.registerViews(spark, sf)
+    CubeManager.ensureBuilt(spark, sf)
+    val dir = Files.createTempDirectory("graft-querylog-reason").toString
+    spark.conf.set(QueryLog.DirConf, dir)
+    try {
+      QueryService.run(spark, sf,
+        "SELECT o_orderstatus, stddev(l_quantity) AS s FROM graft_star " +
+          "GROUP BY o_orderstatus", queryId = "qlr-fb", cached = false)
+      val want = QueryLog.recent.last.route.reason
+      assert(want.exists(_.contains("unmatched aggregation")), s"got $want")
+      QueryLog.flush(spark, dir)
+      val got = QueryLog.load(spark, dir)
+        .filter(col("query_id") === "qlr-fb").collect()
+      assert(got.length == 1 &&
+        Option(got.head.getAs[String]("reason")) == want,
+        s"got ${got.toSeq}")
+    } finally {
+      spark.conf.unset(QueryLog.DirConf)
+      QueryLog.clearPending()
+    }
+
+    // a batch in the pre-change layout: no reason column at all
+    val old = Files.createTempDirectory("graft-querylog-legacy").toString
+    val legacy = org.apache.spark.sql.types.StructType(
+      QueryLog.schema.fields.filterNot(_.name == "reason"))
+    val rows = Seq(
+      Row(1L, "old-routed", "cuboid", "star", Seq("o_orderstatus"), 10L,
+        100L, null),
+      Row(2L, "old-miss", "miss", "star", Seq("l_quantity"), 0L, 0L,
+        Seq("l_quantity")))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), legacy)
+      .write.parquet(s"$old/_querylog")
+    val loaded = QueryLog.load(spark, old).collect()
+    assert(loaded.length == 2 &&
+      loaded.forall(r => r.isNullAt(r.fieldIndex("reason"))),
+      s"got ${loaded.toSeq}")
+    assert(QueryLog.routedSamples(spark, old, "star") ==
+      Seq((Set("o_orderstatus"), 10L)))
+    assert(QueryLog.missSets(spark, old, "star") ==
+      Seq((Set("l_quantity"), Set("l_quantity"))))
+  }
+
   test("the log is bounded: compaction keeps the newest MaxRows in " +
       "few files") {
     val dir = Files.createTempDirectory("graft-querylog-bound").toString
@@ -163,7 +257,7 @@ class QueryLogSpec extends AnyFunSuite {
     (0 to QueryLog.CompactAtFiles).foreach { b =>
       val rows = (0 until perBatch).map(i =>
         Row(b.toLong, s"seed-$b-$i", "test", null, Seq("a"), 1L, 1L,
-          null))
+          null, null))
       spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), QueryLog.schema)
         .write.mode("append").parquet(s"$dir/_querylog")
@@ -197,9 +291,9 @@ class QueryLogSpec extends AnyFunSuite {
     (0 to QueryLog.CompactAtFiles).foreach { b =>
       val rows = (0 until perBatch).flatMap(i => Seq(
         Row(1000L + b, s"miss-$b-$i", "miss", null,
-          Seq("l_quantity"), 1L, 1L, Seq("l_quantity")),
+          Seq("l_quantity"), 1L, 1L, Seq("l_quantity"), null),
         Row(1000L + b, s"pd-$b-$i", "pushdown", null, null, 1L, 1L,
-          null)))
+          null, null)))
       spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), QueryLog.schema)
         .write.mode("append").parquet(s"$dir/_querylog")
@@ -224,8 +318,8 @@ class QueryLogSpec extends AnyFunSuite {
       "the next flush merges it back instead of shadowing it (ADVICE r13)") {
     val dir = Files.createTempDirectory("graft-querylog-crash").toString
     // a live log with two known rows
-    val rows = Seq(Row(1L, "old-1", "test", null, null, 1L, 1L, null),
-                   Row(2L, "old-2", "test", null, null, 1L, 1L, null))
+    val rows = Seq(Row(1L, "old-1", "test", null, null, 1L, 1L, null, null),
+                   Row(2L, "old-2", "test", null, null, 1L, 1L, null, null))
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), QueryLog.schema)
       .write.mode("append").parquet(s"$dir/_querylog")

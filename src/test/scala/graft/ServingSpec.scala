@@ -6,7 +6,7 @@ import scala.concurrent.duration._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cube.{CubeManager, GraftSql, QueryService}
+import graft.cube.{CubeManager, GraftSql, QueryLog, QueryService}
 
 /** Query-server concurrency hygiene (reference: ResultPlan.scala's
   * jobgroup/pool/cancel discipline + SparkSqlClient's row cap): every
@@ -97,10 +97,9 @@ class ServingSpec extends AnyFunSuite {
       s"a routed cuboid scan must report scanned rows, got $served")
     assert(served.scanBytes > 0,
       s"a routed cuboid scan must report scanned bytes, got $served")
-    val logged = QueryService.ServedLog.recent
-      .find(_._1 == "svc-metrics")
-    assert(logged.exists(e => e._3 == served.scanRows &&
-      e._4 == served.scanBytes),
+    val logged = QueryLog.recent.find(_.queryId == "svc-metrics")
+    assert(logged.exists(e => e.scanRows == served.scanRows &&
+      e.scanBytes == served.scanBytes),
       s"the served log must carry the same actuals, got $logged")
     // the DEFAULT serving path reads through the result cache's
     // persisted frame (InMemoryRelation) — actuals must descend into
@@ -125,13 +124,12 @@ class ServingSpec extends AnyFunSuite {
     QueryService.run(spark, sf,
       "SELECT o_orderstatus, stddev(l_quantity) AS s FROM graft_star " +
         "GROUP BY o_orderstatus", queryId = "svc-why-pushdown")
-    val why = QueryService.ServedLog.recent
-      .find(_._1 == "svc-why-pushdown")
-    assert(why.exists(e => e._2 == "fallback" &&
-      e._5.exists(_.contains("unmatched aggregation"))),
+    val why = QueryLog.recent.find(_.queryId == "svc-why-pushdown")
+    assert(why.exists(e => e.route.via == "fallback" &&
+      e.route.reason.exists(_.contains("unmatched aggregation"))),
       s"fallback must carry its traced reason, got $why")
-    assert(QueryService.ServedLog.recent
-      .find(_._1 == "svc-metrics-hit").exists(_._5.isEmpty),
+    assert(QueryLog.recent
+      .find(_.queryId == "svc-metrics-hit").exists(_.route.reason.isEmpty),
       "a routed/cached statement must carry no pushdown reason")
   }
 

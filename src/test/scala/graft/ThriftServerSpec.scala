@@ -123,15 +123,15 @@ class ThriftServerSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"expected a cap refusal, got: ${e.getMessage.take(300)}")
       // under the cap the same session serves normally — and the
       // guarded statement feeds the same monitoring spine as the
-      // programmatic path (scan actuals into ServedLog)
-      val before = cube.QueryService.ServedLog.recent.size
+      // programmatic path (one record in QueryLog.recent)
+      val before = cube.QueryLog.recent.size
       val rs2 = conn.createStatement()
         .executeQuery("SELECT count(*) AS n FROM region")
       assert(rs2.next() && rs2.getLong(1) == 5L)
-      val logged = cube.QueryService.ServedLog.recent
+      val logged = cube.QueryLog.recent
       assert(logged.size > before,
-        "a guarded JDBC statement must land in ServedLog")
-      assert(logged.last._2 == "pushdown",
+        "a guarded JDBC statement must land in QueryLog.recent")
+      assert(logged.last.route.via == "pushdown",
         s"un-accelerated statement must log as pushdown, got ${logged.last}")
     } finally {
       spark.conf.unset("spark.graft.serve.guard")
@@ -155,9 +155,9 @@ class ThriftServerSpec extends AnyFunSuite with BeforeAndAfterAll {
         "SELECT o_orderstatus, stddev(l_quantity) AS s " +
           "FROM graft_star GROUP BY o_orderstatus")
       while (rs.next()) {}
-      val logged = cube.QueryService.ServedLog.recent.last
-      assert(logged._2 == "pushdown", s"got $logged")
-      assert(logged._5.exists(_.contains("unmatched aggregation")),
+      val logged = cube.QueryLog.recent.last
+      assert(logged.route.via == "pushdown", s"got $logged")
+      assert(logged.route.reason.exists(_.contains("unmatched aggregation")),
         s"expected the traced refusal reason in the served log, " +
           s"got $logged")
       // a ROUTED statement carries no reason (count keeps the exact
@@ -166,8 +166,9 @@ class ThriftServerSpec extends AnyFunSuite with BeforeAndAfterAll {
         "SELECT n_name, count(*) AS n " +
           "FROM graft_star GROUP BY n_name")
       while (rs2.next()) {}
-      val routedRow = cube.QueryService.ServedLog.recent.last
-      assert(routedRow._2.startsWith("cube") && routedRow._5.isEmpty,
+      val routedRow = cube.QueryLog.recent.last
+      assert(routedRow.route.via.startsWith("cube") &&
+        routedRow.route.reason.isEmpty,
         s"got $routedRow")
       // the JDBC path feeds the SAME pushdown-shape history as the
       // programmatic one: a dims-unroutable statement persists its

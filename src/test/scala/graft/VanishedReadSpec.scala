@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cube.QueryService
+import graft.cube.{QueryLog, QueryService}
 
 /** The one vanished-file classifier behind the serving layer's and the
   * query log's single swap-window retry: only a file that vanished
@@ -36,5 +36,32 @@ class VanishedReadSpec extends AnyFunSuite {
     assert(!QueryService.vanishedUnder(job(new FileNotFoundException(
       "File /data/sf0.1/lineitem.parquet/part-0.parquet does not exist")),
       root))
+  }
+
+  test("a query-log read retries once, and only on a file vanished " +
+      "under its dir") {
+    // routedSamples and missSets read through this one retry
+    val dir = s"$root/_ql"
+    val vanished = job(new FileNotFoundException(
+      s"File $dir/_querylog/part-0.parquet does not exist"))
+    val elsewhere = job(new FileNotFoundException(
+      "File /data/sf0.1/lineitem.parquet/part-0.parquet does not exist"))
+    var calls = 0
+    def read(fail: Int => Option[Throwable]): Int = {
+      calls = 0
+      QueryLog.retryVanished(dir) {
+        calls += 1
+        fail(calls).foreach(e => throw e)
+        calls
+      }
+    }
+    // a vanished file under the dir: retried once
+    assert(read(n => if (n == 1) Some(vanished) else None) == 2)
+    // a second vanished-file failure propagates
+    assert(intercept[RuntimeException](read(_ => Some(vanished))) eq vanished)
+    assert(calls == 2)
+    // a failure naming another path propagates at once
+    assert(intercept[RuntimeException](read(_ => Some(elsewhere))) eq elsewhere)
+    assert(calls == 1)
   }
 }
