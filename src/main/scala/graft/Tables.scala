@@ -163,6 +163,11 @@ object Tables {
       case _ => raw
     }
   }
+  /** a model table by name — the one loader declared cubes read
+    * through (CubeJson.loadTable), so a declaration over `events` sees
+    * the same normalized `ts` as the built-in events view */
+  def modelTable(s: SparkSession, d: String, name: String): DataFrame =
+    if (name == "events") events(s, d) else tbl(s, d, name)
   def documents(s: SparkSession, d: String): DataFrame =
     cachedTbl(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame =

@@ -4,13 +4,10 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables._
-import graft.Exact._
-import graft.functions.Measures
 
-/** Owns the default test cube (the TPC-H-ish star model of SURVEY §4)
+/** Owns the built-in cubes (declared as documents in [[BuiltinCubes]])
   * and memoizes one built instance per sf dir per JVM — queries route
   * against the built parquet, mirroring Kylin's build-once/query-many
   * lifecycle. The build is the "offline" phase; Bench times it
@@ -24,11 +21,9 @@ object CubeManager {
   /** Flat table = materialized star join (reference:
     * CreateFlatTable.scala:1-241): fact lineitem ⋈ orders ⋈ customer ⋈
     * nation ⋈ region ⋈ supplier ⋈ part, plus derived dim columns and
-    * pre-computed measure input columns. Only the BOUNDED lookups
-    * (nation/region — fixed cardinality at any SF) are hint-broadcast;
-    * the fact-scaled ones (customer/supplier/part/orders) ride
-    * size-based auto-broadcast/AQE and degrade to shuffle joins at
-    * scale (r19 100× fix, pinned by CubeSpec).
+    * pre-computed measure input columns, as the star document declares
+    * them ([[BuiltinCubes]] says why only nation/region are
+    * broadcast-hinted).
     */
   def flatTable(s: SparkSession, d: String): DataFrame =
     flatTableFrom(lineitem(s, d), orders(s, d), customer(s, d),
@@ -56,225 +51,30 @@ object CubeManager {
   /** flat table over explicit inputs — the build path passes
     * snapshot-backed lookup tables (reference DFSnapshotBuilder) so a
     * segment rebuild joins the same dimension rows the cube was built
-    * with even if the live tables changed since */
+    * with even if the live tables changed since. Joins come from the
+    * MODEL (each edge's declared inner/left type), so the built flat
+    * table and the SQL matcher can never disagree. */
   def flatTableFrom(lineitem: DataFrame, orders: DataFrame,
                     customer: DataFrame, nation: DataFrame,
                     region: DataFrame, supplier: DataFrame,
                     part: DataFrame): DataFrame =
-    // joins come from the MODEL (each edge's declared inner/left type),
-    // so the built flat table and the SQL matcher can never disagree.
-    // Only the BOUNDED lookups are broadcast-hinted: nation/region
-    // have fixed real-world cardinality (25/5 rows at any SF), but
-    // supplier and part GROW with the fact table — the cube-path 100×
-    // probe caught the old unconditional hint turning the flat write
-    // super-linear (a 2M-row forced broadcast; at 100 TB it would be
-    // billions of rows and an OOM). Size-based auto-broadcast + AQE
-    // still broadcast them whenever they are actually small, so the
-    // plan is unchanged at bench scale and correct at every scale.
-    starModel.flatten(Map(
+    CubeJson.flatOf(BuiltinCubes.star, Map(
       "lineitem" -> lineitem, "orders" -> orders, "customer" -> customer,
-      "nation" -> broadcast(nation), "region" -> broadcast(region),
-      "supplier" -> supplier, "part" -> part))
-      .select(
-        col("l_orderkey"), col("l_linenumber"),
-        col("r_name"), col("n_name"), col("c_mktsegment"),
-        col("o_orderstatus"), col("o_orderpriority"),
-        col("l_returnflag"), col("p_brand"),
-        date_format(col("o_orderdate"), "yyyy-MM").as("o_month"),
-        date_format(col("o_orderdate"), "yyyy").as("o_year"),
-        col("o_orderdate"),
-        col("l_quantity"), col("o_custkey"), col("l_extendedprice"),
-        // the raw discount rides along so user SQL can spell out the
-        // revenue algebra literally (SUM(l_extendedprice*(1-l_discount)))
-        // and still match the pre-computed measure
-        col("l_discount"),
-        discPrice(col("l_extendedprice"), col("l_discount")).as("disc_price"),
-        (discPrice(col("l_extendedprice"), col("l_discount")) * 10000)
-          .cast(LongType).as("disc_price_micros"),
-        when(col("l_quantity") >= 49.5, col("l_extendedprice"))
-          .as("raw_hi_price"),
-        col("c_name"))
+      "nation" -> nation, "region" -> region, "supplier" -> supplier,
+      "part" -> part))
 
   /** The star model behind the default cube (reference: core-metadata
-    * DataModelDesc): lineitem fact, each lookup joined through its
-    * PK-FK edge. User SQL written as these explicit joins — with each
-    * join TYPED as declared — routes to the cube via ModelMatcher. The
-    * part edge is declared LEFT (the common production choice,
-    * JoinDesc.java:35-40): fact rows keep flowing even if a part row
-    * is missing, and only user-written LEFT JOIN part queries match. */
-  def starModel: ModelDef = ModelDef("lineitem", Seq(
-    ModelEdge("orders", "lineitem", "o_orderkey", "l_orderkey"),
-    ModelEdge("customer", "orders", "c_custkey", "o_custkey"),
-    ModelEdge("nation", "customer", "n_nationkey", "c_nationkey"),
-    ModelEdge("region", "nation", "r_regionkey", "n_regionkey"),
-    ModelEdge("supplier", "lineitem", "s_suppkey", "l_suppkey"),
-    ModelEdge("part", "lineitem", "p_partkey", "l_partkey",
-      joinType = "left")))
+    * DataModelDesc). User SQL written as these explicit joins — with
+    * each join TYPED as declared — routes to the cube via
+    * ModelMatcher. */
+  def starModel: ModelDef = CubeJson.toModel(BuiltinCubes.star.model)
 
-  /** The default cube: 7 dims, 8 measures covering every reference
-    * measure family, 2-year segments over o_orderdate, and a 7-cuboid
-    * materialized lattice subset (agg-group-pruned, like the
-    * reference's aggregation groups). */
-  def defaultCube: CubeDef = {
-    // o_month LEADS the dim (rowkey) order: writeCuboid sorts rows by
-    // this sequence, so the time dim first makes row-group min/max
-    // stats on it disjoint ordered slices — residual month filters
-    // (partially-overlapped segments) prune row groups at the scan.
-    // Matches the reference's rowkey-design guidance of placing the
-    // partition date column at the head of the rowkey
-    // (RowKeyColDesc order in core-cube; Repartitioner.java:156-161
-    // sorts by that order on write).
-    val dims = Seq("o_month", "r_name", "n_name", "c_mktsegment",
-                   "o_orderstatus", "l_returnflag", "p_brand")
-    val measures = Seq(
-      Measure("revenue",
-        fromRaw = sum(col("disc_price")),
-        fromState = s => sum(col(s)),
-        present = _.cast(DoubleType),
-        answers = Some(SqlAgg.SumOf("disc_price")),
-        // the literal TPC-H algebra also answers from this measure
-        // (FunctionDesc parameter matching, canonicalized-tree equality)
-        answersSumOf =
-          Some(discPrice(col("l_extendedprice"), col("l_discount")))),
-      Measure("qty",
-        fromRaw = sum(dec(col("l_quantity"))),
-        fromState = s => sum(col(s)),
-        present = _.cast(DoubleType),
-        answers = Some(SqlAgg.SumOf("l_quantity"))),
-      Measure("nrows",
-        fromRaw = count(lit(1)),
-        fromState = s => sum(col(s)),
-        answers = Some(SqlAgg.CountAll)),
-      // basic min/max family (reference measure/basic): states merge
-      // losslessly through layered re-agg; exact on doubles (no sums)
-      Measure("qty_min",
-        fromRaw = min(col("l_quantity")),
-        fromState = s => min(col(s)),
-        answers = Some(SqlAgg.MinOf("l_quantity"))),
-      Measure("price_max",
-        fromRaw = max(col("l_extendedprice")),
-        fromState = s => max(col(s)),
-        answers = Some(SqlAgg.MaxOf("l_extendedprice"))),
-      // DimCountDistinct family (reference measure/dim/
-      // DimCountDistinctMeasureType): exact distinct via the value SET
-      // itself — for low-cardinality columns with no dictionary/bitmap;
-      // the reference guards cardinality the same way
-      Measure("prio_set",
-        fromRaw = collect_set(col("o_orderpriority")),
-        fromState = s => array_distinct(flatten(collect_list(col(s)))),
-        present = c => size(c).cast(LongType),
-        answers = Some(SqlAgg.CountDistinctOf("o_orderpriority"))),
-      // extended-column value measure: o_year is functionally
-      // determined by o_month, so max() IS the value
-      // (ExtendedColumnMeasureType — keeps o_year out of cuboid dims)
-      Measure("o_year_ext",
-        fromRaw = max(col("o_year")),
-        fromState = s => max(col(s))),
-      Measure("cust_bitmap",
-        fromRaw = Measures.bitmapAgg(col("o_custkey")),
-        fromState = s => Measures.bitmapUnion(col(s)),
-        present = Measures.bitmapCount(_),
-        answers = Some(SqlAgg.CountDistinctOf("o_custkey"))),
-      Measure("cust_hll",
-        fromRaw = Measures.hllAgg(col("o_custkey")),
-        fromState = s => Measures.hllUnion(col(s)),
-        present = Measures.hllEstimate(_),
-        answers = Some(SqlAgg.ApproxDistinctOf("o_custkey")),
-        heavyState = true),
-      Measure("brand_topn",
-        fromRaw = Measures.topnAgg(col("p_brand"), col("disc_price_micros")),
-        fromState = s => Measures.topnUnion(col(s)),
-        topnShape = Some(TopNShape(Seq("p_brand"), "disc_price", 10000L))),
-      // multi-column TopN (reference TopNMeasureType.java:129-148 groups
-      // by multiple literal columns): sketch keyed on (p_brand,
-      // c_mktsegment), same SpaceSaving state
-      Measure("brandseg_topn",
-        fromRaw = Measures.topnAggMulti(Seq(col("p_brand"),
-          col("c_mktsegment")), col("disc_price_micros")),
-        fromState = s => Measures.topnUnion(col(s)),
-        topnShape = Some(TopNShape(Seq("p_brand", "c_mktsegment"),
-          "disc_price", 10000L))),
-      Measure("qty_kll",
-        fromRaw = Measures.kllAgg(col("l_quantity")),
-        fromState = s => Measures.kllUnion(col(s)),
-        present = Measures.kllQuantile(_, lit(0.5)),
-        answers = Some(SqlAgg.PercentileOf("l_quantity"))),
-      Measure("raw_hi",
-        fromRaw = collect_list(col("raw_hi_price")),
-        fromState = s => flatten(collect_list(col(s)))),
-      // bitmap over a STRING column via the global dictionary the build
-      // phase attaches (c_name_id) — reference DFDictionaryBuilder path
-      Measure("cname_bitmap",
-        fromRaw = Measures.bitmapAgg(col("c_name_id")),
-        fromState = s => Measures.bitmapUnion(col(s)),
-        present = Measures.bitmapCount(_)))
-    val segs = Seq(
-      Segment("s1995", "1995-01-01", "1997-01-01"),
-      Segment("s1997", "1997-01-01", "1999-01-01"),
-      Segment("s1999", "1999-01-01", "2001-01-01"),
-      Segment("s2001", "2001-01-01", "2003-01-01"))
-    val all = dims.toSet
-    val cuboids = Seq(
-      all,
-      Set("r_name", "n_name", "o_orderstatus", "l_returnflag", "o_month"),
-      Set("o_orderstatus", "l_returnflag", "p_brand"),
-      Set("o_orderstatus", "l_returnflag"),
-      Set("r_name", "n_name"),
-      Set("c_mktsegment", "o_month"),
-      Set("o_month"))
-    CubeDef("star", dims, measures, "o_orderdate", segs, cuboids,
-      timeDim = Some(TimeDim.month("o_month")),
-      shardBy = Some("r_name"),
-      // nation attributes not materialized in any cuboid, answered by
-      // joining the nation snapshot on n_name (CubeDesc derivedToHostMap)
-      derived = Seq(DerivedDim("n_nationkey", "n_name", "nation"),
-                    DerivedDim("n_regionkey", "n_name", "nation")),
-      // TPC-H NOT NULL contract — gates the AVG → SUM/COUNT(*) rewrite
-      // (and its expression form, which checks the INPUT columns)
-      notNull = Set("disc_price", "l_quantity", "l_extendedprice",
-        "l_discount"),
-      extended = Seq(ExtendedColumn("o_year", "o_month", "o_year_ext")),
-      // TPC-H order dates are calendar days stored at midnight — the
-      // partition-column day contract holds, so BETWEEN/<=/= day
-      // predicates convert to exact [day, day) segment ranges
-      segDayGranular = true,
-      // the build dictionary-encodes c_name (→ c_name_id, feeding
-      // cname_bitmap) through this root's append-stable tree
-      dictColumns = Set("c_name"))
-  }
+  /** The default cube, built from its document per call (Column trees
+    * are never shared across queries). */
+  def defaultCube: CubeDef = CubeJson.toCubeDef(BuiltinCubes.star)
 
-  // ── a second cube over the events stream table: the engine is
-  // multi-cube generic (Kylin projects hold many cubes); day-granular
-  // segments + residual pruning on ev_day
-  def eventsFlat(s: SparkSession, d: String): DataFrame =
-    events(s, d).select(col("ts"),
-      date_format(col("ts"), "yyyy-MM-dd").as("ev_day"),
-      col("event_type"), col("user_id"), col("value"))
-
-  def eventsCube: CubeDef = {
-    val measures = Seq(
-      Measure("n_events",
-        fromRaw = count(lit(1)),
-        fromState = s => sum(col(s)),
-        answers = Some(SqlAgg.CountAll)),
-      Measure("value_sum",
-        fromRaw = sum(dec(col("value"))),
-        fromState = s => sum(col(s)),
-        present = _.cast(DoubleType),
-        answers = Some(SqlAgg.SumOf("value"))),
-      Measure("user_bitmap",
-        fromRaw = Measures.bitmapAgg(col("user_id")),
-        fromState = s => Measures.bitmapUnion(col(s)),
-        present = Measures.bitmapCount(_),
-        answers = Some(SqlAgg.CountDistinctOf("user_id"))))
-    val dims = Seq("ev_day", "event_type")
-    CubeDef("events", dims, measures, "ts",
-      Seq(Segment("s2024m1", "2024-01-01", "2024-02-01")),
-      Seq(dims.toSet, Set("ev_day"), Set("event_type")),
-      // day boundaries are always expressible on ev_day
-      timeDim = Some(TimeDim("ev_day", d => Some(d.substring(0, 10)))),
-      notNull = Set("value"))
-  }
+  /** the events cube's CubeDef (specs build and inspect it directly) */
+  def eventsCube: CubeDef = CubeJson.toCubeDef(BuiltinCubes.events)
 
   /** a memoized instance plus the buildId stamp(s) it was loaded or
     * built under — [[MetaStamp]] revalidates the stamp on every
@@ -286,7 +86,6 @@ object CubeManager {
     * replaces the push broadcast with a cheap pull stamp, which a
     * shared store makes race-free (the meta commit is the publish). */
   private val built = TrieMap.empty[String, (CubeInstance, String)]
-  private val evBuilt = TrieMap.empty[String, (CubeInstance, String)]
   /** JSON-declared cubes ([[CubeJson]]), keyed `<cube name>|<sfDir>` —
     * one registry holds every runtime declaration */
   private val declaredBuilt = TrieMap.empty[String, (CubeInstance, String)]
@@ -303,8 +102,8 @@ object CubeManager {
     * everything but their dict phases — DictLeaseContentionSpec),
     * which a single global build lock silently forbade. Same-cube
     * callers still serialize (one build per miss); the rare
-    * lifecycle ops that guard their own memos (retain / ensureMerged
-    * / ensureHybrid) keep the coarse `lock` and only ever take a
+    * lifecycle ops that guard their own memos (retain / ensureMerged)
+    * keep the coarse `lock` and only ever take a
     * build lock NESTED INSIDE it, so lock ordering is global → key
     * and cannot deadlock. */
   private val buildLocks = TrieMap.empty[String, Object]
@@ -316,8 +115,8 @@ object CubeManager {
     * The SQL result cache keys on these instances' stamps, so it must
     * reset with them (ADVICE r10). */
   private[graft] def resetMemos(): Unit = {
-    built.clear(); evBuilt.clear(); mergedCache.clear(); hybridBuilt.clear()
-    declaredBuilt.clear(); fleetEnum.clear()
+    built.clear(); mergedCache.clear(); declaredBuilt.clear()
+    fleetEnum.clear()
     // buildLocks deliberately NOT cleared: minting a fresh lock object
     // while a build holds the old one would let a same-cube build run
     // concurrently (the ioLocks/clearPending hazard); the map is
@@ -332,9 +131,8 @@ object CubeManager {
     * with routing's own view of the world; its first touch changes
     * the set and thus the key) */
   private[graft] def loadedInstances(sfDir: String): Seq[CubeInstance] =
-    built.get(sfDir).map(_._1).toSeq ++ evBuilt.get(sfDir).map(_._1).toSeq ++
+    built.get(sfDir).map(_._1).toSeq ++
       mergedCache.get(sfDir).map(_._1).toSeq ++
-      hybridBuilt.get(sfDir).toSeq.flatMap(_._1.slices.map(_.inst)) ++
       declaredBuilt.collect {
         case (k, (inst, _)) if k.endsWith(s"|$sfDir") => inst
       }
@@ -555,13 +353,10 @@ object CubeManager {
       defaultCube, root)
   }
 
-  /** Load-or-build (once per JVM per sf dir) the events cube;
-    * stamp-aware like [[ensureBuilt]]. */
-  def ensureEventsBuilt(spark: SparkSession, sfDir: String): CubeInstance = {
-    val root = s"$cubeRoot/${sfName(sfDir)}-events"
-    ensureFresh(evBuilt, spark, sfDir, root, eventsCube)(
-      CubeBuilder.build(spark, eventsFlat(spark, sfDir), eventsCube, root))
-  }
+  /** Load-or-build the built-in events cube through the declared path
+    * (root `<sf>-events`); stamp-aware like [[ensureBuilt]]. */
+  def ensureEventsBuilt(spark: SparkSession, sfDir: String): CubeInstance =
+    ensureDeclared(spark, sfDir, BuiltinCubes.events)
 
   /** Dictionary-encode `flat0` through the root's trees — ALWAYS
     * under the root-level `dict` lease: a shared root (rootScope)
@@ -587,7 +382,7 @@ object CubeManager {
       // work itself, so the contention spec/probe can separate lease
       // WAIT (before this interval) from dict cost (the interval) —
       // and declared builds report a `dictionary` build phase like
-      // the compiled star build does
+      // the star build does
       CubeBuilder.timed("dictionary", spec.name) {
         spec.dictColumns.foldLeft(flat0)((f, c) =>
           Dictionary.encode(f,
@@ -614,8 +409,8 @@ object CubeManager {
     ensureFresh(declaredBuilt, spark, s"${cube.name}|$sfDir", root, cube) {
       // the DECLARED segment span is the cube's data universe at
       // deploy time: rows beyond it are future appends, not drops —
-      // scope the build input exactly like the compiled hybrid
-      // members scope theirs. Holes/overlaps INSIDE the span are
+      // scope the build input to it (a hybrid member builds from the
+      // rows of its own era). Holes/overlaps INSIDE the span are
       // refused by CubeJson.validate at deploy time (ADVICE r15), so
       // the span filter is exact.
       val lo = cube.segments.map(_.start).min
@@ -669,97 +464,6 @@ object CubeManager {
         case None => built
       }
     }
-  }
-
-  // ── hybrid realization members (VERDICT r8 item 2) ────────────────
-
-  /** the schema-evolution cutover the hybrid splices at: the "old"
-    * design serves history before this day, the "new" design from it
-    * forward (HybridInstance.java's dateRange partition) */
-  val HybridCutover = "1999-01-01"
-
-  /** a NARROW member design (3 dims incl. the month time-dim, the
-    * basic sum/count measures): hybrid members model the retired/
-    * redesigned cube pair, and keeping them small keeps the extra
-    * build a fraction of the star build's cost. The time dim lets a
-    * query range that cuts INTO a slice route with a per-slice
-    * residual month filter instead of falling back. */
-  private def hybridMember(name: String, segs: Seq[Segment]): CubeDef = {
-    val wide = defaultCube
-    // time dim leads for the same sorted-layout reason as defaultCube
-    val dims = Seq("o_month", "o_orderstatus", "n_name")
-    // members declare the SKETCH family too (hll/kll/bitmap/topn):
-    // after a real evolution there is no wide fallback cube, so the
-    // hybrid must serve every measure type its members carry —
-    // HybridStorageQuery unions tuple iterators for ALL member
-    // measures, not just plain sums (VERDICT r9 item 4)
-    wide.copy(name = name, dims = dims,
-      measures = wide.measures.filter(m =>
-        Set("revenue", "qty", "nrows",
-          "cust_hll", "qty_kll", "cust_bitmap", "brand_topn")
-          .contains(m.name)),
-      segments = segs,
-      cuboids = Seq(dims.toSet, Set("o_orderstatus", "o_month")),
-      timeDim = Some(TimeDim.month("o_month")),
-      shardBy = None, derived = Nil, extended = Nil,
-      // the dict-encoded cname_bitmap is NOT carried: dictionary id
-      // spaces are per-root and cannot merge across the splice
-      dictColumns = Set.empty)
-  }
-
-  /** hybrid memo carries one buildId stamp per member root */
-  private val hybridBuilt =
-    TrieMap.empty[String, (HybridInstance, Seq[String])]
-
-  /** Load-or-build the two hybrid member cubes and wrap them as one
-    * spliced realization: the old cube over [data start, cutover), the
-    * new one from the cutover on. Each member builds from the flat
-    * rows of ITS OWN era — exactly the state a real evolution leaves
-    * behind (the retired cube was never built past its cutover).
-    * Stamp-aware per member, like [[ensureBuilt]]. */
-  def ensureHybrid(spark: SparkSession, sfDir: String): HybridInstance = {
-    def memberRoot(name: String) = declaredRoot(sfDir, name)
-    def stamps() = Seq("star-old", "star-new").map(n =>
-      MetaStamp.of(spark, memberRoot(n), n))
-    def fresh(): Option[HybridInstance] =
-      hybridBuilt.get(sfDir).filter { case (_, ids) =>
-        stamps().zip(ids).forall { case (f, m) => stampServes(f, m) }
-      }.map(_._1)
-    fresh().getOrElse(lock.synchronized {
-      fresh().getOrElse {
-        // each member memoizes the buildId READ WITH its instance —
-        // never a post-hoc stamp, which a foreign commit in between
-        // would blind (same pairing rule as ensureFresh)
-        def member(name: String,
-                   segs: Seq[Segment]): (CubeInstance, String) = {
-          val root = memberRoot(name)
-          val cube = hybridMember(name, segs)
-          def loaded = CubeMeta.load(spark, cube, root)
-            .map(l => (l.inst, l.buildId))
-          loaded.getOrElse {
-            BuildLease.withLease(spark, root, cube.name)(loaded) {
-              val flat = flatTable(spark, sfDir).filter(
-                col("o_orderdate") >=
-                  lit(segs.head.start).cast("timestamp") &&
-                col("o_orderdate") < lit(segs.last.end).cast("timestamp"))
-              val b = CubeBuilder.build(spark, flat, cube, root)
-              loaded.getOrElse((b, MetaStamp.of(spark, root, cube.name)))
-            }
-          }
-        }
-        val (old, oldId) = member("star-old", Seq(
-          Segment("s1995", "1995-01-01", "1997-01-01"),
-          Segment("s1997", "1997-01-01", HybridCutover)))
-        val (nu, nuId) = member("star-new", Seq(
-          Segment("s1999", HybridCutover, "2001-01-01"),
-          Segment("s2001", "2001-01-01", "2003-01-01")))
-        val h = HybridInstance("star-hybrid", Seq(
-          HybridSlice(old, QueryRouter.MinDay, HybridCutover),
-          HybridSlice(nu, HybridCutover, QueryRouter.MaxDay)))
-        hybridBuilt.put(sfDir, (h, Seq(oldId, nuId)))
-        h
-      }
-    })
   }
 
   /** Retention over the MEMOIZED default instance: applies the policy

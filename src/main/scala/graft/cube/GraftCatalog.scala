@@ -14,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   * their table name (qualifier-guarded to this database), ROUTE to the
   * cube exactly like the temp-view path.
   *
-  * `graft_cat.graft_star` is a persistent catalog VIEW carrying the
-  * same star-join algebra as `CubeManager.flatTableFrom` (a spec pins
-  * the two frames equal), so catalog users query the pre-joined
+  * `graft_cat.graft_star` is a persistent catalog VIEW rendered from
+  * the same star document `CubeManager.flatTableFrom` builds from (a
+  * spec pins the two frames equal), so catalog users query the pre-joined
   * surface by name too; GraftSql's view recognition accepts a `View`
   * node from this database as the registered cube view.
   *
@@ -33,8 +33,6 @@ object GraftCatalog {
     * table that happens to be named `lineitem` can never route */
   val Db = "graft_cat"
 
-  private val StarTables = Seq("lineitem", "orders", "customer",
-    "supplier", "part", "nation", "region")
   /** plain pipeline tables, registered for catalog addressing (no
     * routing semantics attached) */
   private val PlainTables = Seq("documents", "embeddings", "events")
@@ -59,33 +57,20 @@ object GraftCatalog {
     }
   private[graft] def memoSize: Int = registered.synchronized(registered.size)
 
-  /** the flat-table algebra as view SQL — MUST stay column-identical
-    * to CubeManager.flatTableFrom (CatalogSpec pins frame equality) */
-  private def starViewSql: String =
-    s"""SELECT l.l_orderkey, l.l_linenumber,
-       |  r.r_name, n.n_name, c.c_mktsegment,
-       |  o.o_orderstatus, o.o_orderpriority,
-       |  l.l_returnflag, p.p_brand,
-       |  date_format(o.o_orderdate, 'yyyy-MM') AS o_month,
-       |  date_format(o.o_orderdate, 'yyyy') AS o_year,
-       |  o.o_orderdate,
-       |  l.l_quantity, o.o_custkey, l.l_extendedprice,
-       |  l.l_discount,
-       |  CAST(l.l_extendedprice AS DECIMAL(18,2)) *
-       |    (1 - CAST(l.l_discount AS DECIMAL(4,2))) AS disc_price,
-       |  CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
-       |    (1 - CAST(l.l_discount AS DECIMAL(4,2))) * 10000 AS BIGINT)
-       |    AS disc_price_micros,
-       |  CASE WHEN l.l_quantity >= 49.5 THEN l.l_extendedprice END
-       |    AS raw_hi_price,
-       |  c.c_name
-       |FROM $Db.lineitem l
-       |JOIN $Db.orders o ON o.o_orderkey = l.l_orderkey
-       |JOIN $Db.customer c ON c.c_custkey = o.o_custkey
-       |JOIN $Db.nation n ON n.n_nationkey = c.c_nationkey
-       |JOIN $Db.region r ON r.r_regionkey = n.n_regionkey
-       |JOIN $Db.supplier s ON s.s_suppkey = l.l_suppkey
-       |LEFT JOIN $Db.part p ON p.p_partkey = l.l_partkey""".stripMargin
+  /** the star flat table as view SQL, rendered from the built-in
+    * document's joins and flat columns — the lists
+    * CubeManager.flatTableFrom builds from (CatalogSpec pins frame
+    * equality). Column names are unique across the star's tables, so
+    * they need no qualifier. */
+  private def flatViewSql(j: CubeJson.JsonCube): String = {
+    val cols = j.flatColumns.map(fc =>
+      fc.expr.fold(fc.name)(e => s"$e AS ${fc.name}"))
+    val joins = j.model.edges.map(e =>
+      s"${if (e.joinType == "left") "LEFT JOIN" else "JOIN"} " +
+        s"$Db.${e.lookup} ON ${e.lookupKey} = ${e.foreignKey}")
+    (s"SELECT ${cols.mkString(", ")} FROM $Db.${j.model.fact}" +: joins)
+      .mkString("\n") + j.model.filterExpr.fold("")(f => s"\nWHERE $f")
+  }
 
   /** Register (or re-point) the catalog objects for `sfDir`. */
   def register(spark: SparkSession, sfDir: String): Unit = {
@@ -95,7 +80,7 @@ object GraftCatalog {
     synchronized {
       if (memoGet(key).contains(sfDir)) return
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $Db")
-      (StarTables ++ PlainTables).foreach { t =>
+      (BuiltinCubes.star.model.tables ++ PlainTables).foreach { t =>
         // external table over the existing parquet; drop-first so a
         // changed sfDir re-points the location (DROP on an external
         // table never touches the data files)
@@ -104,7 +89,8 @@ object GraftCatalog {
           s"LOCATION '$sfDir/$t.parquet'")
       }
       spark.sql(
-        s"CREATE OR REPLACE VIEW $Db.${GraftSql.ViewName} AS $starViewSql")
+        s"CREATE OR REPLACE VIEW $Db.${GraftSql.ViewName} AS " +
+          flatViewSql(BuiltinCubes.star))
       // the events flat view needs the same ts normalization as
       // Tables.events (the generator's physical form varies: nanos
       // long / micros-NTZ / UTC timestamp) — generate the cast from

@@ -138,9 +138,8 @@ object GraftSql {
     val builtin = Seq(
       Binding(ViewName, CubeManager.flatTable, CubeManager.ensureBuilt,
         model = Some(CubeManager.starModel),
-        rawTables = Seq("lineitem", "orders", "customer", "nation",
-          "region", "supplier", "part")),
-      Binding(EventsViewName, CubeManager.eventsFlat,
+        rawTables = BuiltinCubes.star.model.tables),
+      Binding(EventsViewName, CubeJson.flatBuilder(BuiltinCubes.events),
         CubeManager.ensureEventsBuilt),
       // the schema-evolution view: an old/new cube pair spliced at the
       // cutover answers first — every rewrite family the members'
@@ -148,7 +147,8 @@ object GraftSql {
       // measure); the wide star instance covers whatever the hybrid
       // still refuses (e.g. measures the members don't declare)
       Binding(HybridViewName, CubeManager.flatTable, CubeManager.ensureBuilt,
-        hybrids = Seq(CubeManager.ensureHybrid)))
+        hybrids = Seq((s, d) =>
+          CubeJson.ensureDeclaredHybrid(s, d, BuiltinCubes.hybrid))))
     builtin.filterNot(b => extraBindings.contains(b.view)) ++
       extraBindings.values
   }

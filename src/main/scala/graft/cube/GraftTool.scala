@@ -143,7 +143,7 @@ object GraftTool {
       java.nio.file.Paths.get(f)), "UTF-8"))
       .fold(PlainDoc.apply, GroupDoc.apply)
 
-  /** compiled name or declared document → (CubeDef, optional spec);
+  /** built-in name or declared document → (CubeDef, optional spec);
     * realization documents resolve the `--member`-addressed cube */
   private def resolveCube(p: Parsed)
       : (CubeDef, Option[CubeJson.JsonCube]) =
@@ -151,7 +151,7 @@ object GraftTool {
       case (Some("star"), _)   => (CubeManager.defaultCube, None)
       case (Some("events"), _) => (CubeManager.eventsCube, None)
       case (Some(other), _) => throw new IllegalArgumentException(
-        s"unknown compiled cube '$other' (star|events) — declared " +
+        s"unknown built-in cube '$other' (star|events) — declared " +
           "cubes go through --def <file>")
       case (None, Some(f)) =>
         val spec = readDoc(f).memberSpec(p)

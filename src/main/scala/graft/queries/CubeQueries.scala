@@ -29,11 +29,7 @@ object CubeQueries extends QueryGroup {
     //     scale. The shared CubeManager.flatTable stays unwidened: its
     //     light-aggregate consumers measured slower with the exchange.)
     Q("cube_flat_table",
-      (s, d) => CubeManager.flatTableFrom(
-          graft.Tables.widened(s, d, "lineitem"), graft.Tables.orders(s, d),
-          graft.Tables.customer(s, d), graft.Tables.nation(s, d),
-          graft.Tables.region(s, d), graft.Tables.supplier(s, d),
-          graft.Tables.part(s, d))
+      (s, d) => CubeManager.flatTableWidened(s, d)
         .select(col("l_orderkey"), col("l_linenumber"), col("r_name"),
                 col("p_brand"), col("o_orderstatus"),
                 col("disc_price").cast(DoubleType).as("revenue"))
@@ -1180,8 +1176,8 @@ object CubeQueries extends QueryGroup {
         // the splice reads BOTH member cube roots (old pre-cutover,
         // new post-cutover), nothing from the wide star instance
         val files = r.df.inputFiles
-        assert(files.exists(_.contains("-star-old/")) &&
-          files.exists(_.contains("-star-new/")),
+        assert(files.exists(_.contains("-star_old/")) &&
+          files.exists(_.contains("-star_new/")),
           s"expected both hybrid member roots, got ${files.take(3).toSeq}")
         r.df.orderBy("o_orderstatus")
       },
@@ -1212,8 +1208,8 @@ object CubeQueries extends QueryGroup {
         assert(r.routed && r.via == "hybrid",
           s"expected the hybrid to serve the HLL sketch, got ${r.via}")
         val files = r.df.inputFiles
-        assert(files.exists(_.contains("-star-old/")) &&
-          files.exists(_.contains("-star-new/")),
+        assert(files.exists(_.contains("-star_old/")) &&
+          files.exists(_.contains("-star_new/")),
           s"expected both hybrid member roots, got ${files.take(3).toSeq}")
         val exact = CubeManager.flatTable(s, d)
           .filter("o_orderdate >= '1997-01-01' and o_orderdate < '2001-01-01'")

@@ -368,32 +368,14 @@ object EventQueries extends QueryGroup {
 
   /** The operator-authored streaming-cube document behind
     * `ev_stream_declared` (and DeclaredStreamingSpec): batch layer =
-    * the compiled events cube's shape, speed layer = a NON-default
-    * 12h/2h cadence pinning that the wiring reads the document. */
+    * the built-in events document renamed `events_decl`, speed layer =
+    * a NON-default 12h/2h cadence pinning that the wiring reads the
+    * document. */
   val declaredEventsDoc: String =
-    """{
-      |  "name": "events_decl",
-      |  "model": {"fact": "events"},
-      |  "flatColumns": [
-      |    {"name": "ts"},
-      |    {"name": "ev_day", "expr": "date_format(ts, 'yyyy-MM-dd')"},
-      |    {"name": "event_type"},
-      |    {"name": "user_id"},
-      |    {"name": "value"}
-      |  ],
-      |  "dims": ["ev_day", "event_type"],
-      |  "measures": [
-      |    {"name": "n_events", "family": "count"},
-      |    {"name": "value_sum", "family": "sum", "column": "value",
-      |     "decimal": true, "presentDouble": true},
-      |    {"name": "user_bitmap", "family": "bitmap", "column": "user_id"}
-      |  ],
-      |  "segmentCol": "ts",
-      |  "segments": [{"name": "s2024m1", "start": "2024-01-01",
-      |                "end": "2024-02-01"}],
-      |  "cuboids": [["ev_day"], ["event_type"]],
-      |  "timeDim": {"name": "ev_day", "granularity": "day"},
-      |  "notNull": ["value"],
+    graft.cube.BuiltinCubes.EventsJson
+      .replace("\"name\": \"events\"", "\"name\": \"events_decl\"")
+      .stripSuffix("\n}") +
+    """,
       |  "streaming": {
       |    "source": "file",
       |    "window": "12 hours",

@@ -29,7 +29,7 @@ class BuildLeaseSpec extends AnyFunSuite {
         BuildLease.withLease(spark, root, cube.name)(
           CubeMeta.load(spark, cube, root).map(_.inst)) {
           builds.incrementAndGet()
-          CubeBuilder.build(spark, CubeManager.eventsFlat(spark, sf),
+          CubeBuilder.build(spark, TestSpark.eventsFlat(spark, sf),
             cube, root)
         }
       }
@@ -77,7 +77,7 @@ class BuildLeaseSpec extends AnyFunSuite {
       val inst = BuildLease.withLease(spark, root, cube.name)(
         CubeMeta.load(spark, cube, root).map(_.inst)) {
         builds.incrementAndGet()
-        CubeBuilder.build(spark, CubeManager.eventsFlat(spark, sf),
+        CubeBuilder.build(spark, TestSpark.eventsFlat(spark, sf),
           cube, root)
       }
       assert(builds.get() == 1 && inst.rows.nonEmpty,
@@ -113,7 +113,7 @@ class BuildLeaseSpec extends AnyFunSuite {
       // commit meta so the waiter has something to pick up when the
       // "holder" finally releases
       val winner = CubeBuilder.build(spark,
-        CubeManager.eventsFlat(spark, sf), cube, root)
+        TestSpark.eventsFlat(spark, sf), cube, root)
       val releaser = new Thread(() => {
         Thread.sleep(1500) // several expiry windows of LIVE heartbeats
         heart.interrupt(); lease.delete(): Unit
@@ -136,7 +136,7 @@ class BuildLeaseSpec extends AnyFunSuite {
     val cube = CubeManager.eventsCube
     // the "winner" builds first and commits
     val winner = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), cube, root)
+      TestSpark.eventsFlat(spark, sf), cube, root)
     // a live (fresh-mtime) lease is still present when the waiter
     // arrives; it releases shortly after — the waiter must pick up the
     // committed meta, never build

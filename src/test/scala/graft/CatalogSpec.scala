@@ -88,7 +88,7 @@ class CatalogSpec extends AnyFunSuite {
         |FROM graft_cat.graft_events GROUP BY ev_day""".stripMargin)
     assert(r.routed && r.via == "cuboid",
       s"catalog events view must route, got ${r.via}")
-    val want = CubeManager.eventsFlat(spark, sf)
+    val want = TestSpark.eventsFlat(spark, sf)
       .groupBy("ev_day")
       .agg(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("n_events"),

@@ -27,7 +27,7 @@ object ChildAppend {
       val cube = CubeManager.eventsCube
       val loaded = CubeMeta.load(spark, cube, root)
         .getOrElse(sys.error(s"child: no committed meta under $root"))
-      val febFlat = CubeManager.eventsFlat(spark, sfDir)
+      val febFlat = TestSpark.eventsFlat(spark, sfDir)
         .withColumn("ts", col("ts") + expr("INTERVAL 31 DAYS"))
         .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd"))
       CubeBuilder.appendSegment(spark, loaded.inst, febFlat,

@@ -10,144 +10,175 @@ import graft.queries.CubeQueries
   * JSON document an operator authors and deploys at runtime, with no
   * Scala definition and no recompile (reference: core-cube/model/
   * CubeDesc.java:99, a RootPersistentEntity serialized as JSON). The
-  * measure-SPEC layer constructs today's closure-bearing Measures, so
-  * a JSON declaration equivalent to a compiled CubeDef fingerprints
-  * IDENTICALLY (same dims, same cuboid ids, same measure algebra). */
+  * measure-SPEC layer constructs the closure-bearing Measures; the
+  * built-in cubes are such documents too, pinned here against their
+  * layout from before they were (same dims, cuboid ids and measure
+  * algebra, so no committed layout rebuilds). */
 class CubeJsonSpec extends AnyFunSuite {
   import TestSpark._
 
-  /** a JSON document equivalent to CubeManager.defaultCube — every
-    * dim, segment, cuboid, derived/extended declaration, and all 14
-    * measures re-declared as specs */
-  private val starJson =
-    """{
-      |  "name": "star",
-      |  "model": {
-      |    "fact": "lineitem",
-      |    "edges": [
-      |      {"lookup": "orders", "via": "lineitem",
-      |       "lookupKey": "o_orderkey", "foreignKey": "l_orderkey"},
-      |      {"lookup": "customer", "via": "orders",
-      |       "lookupKey": "c_custkey", "foreignKey": "o_custkey"},
-      |      {"lookup": "nation", "via": "customer",
-      |       "lookupKey": "n_nationkey", "foreignKey": "c_nationkey"},
-      |      {"lookup": "region", "via": "nation",
-      |       "lookupKey": "r_regionkey", "foreignKey": "n_regionkey"},
-      |      {"lookup": "supplier", "via": "lineitem",
-      |       "lookupKey": "s_suppkey", "foreignKey": "l_suppkey"},
-      |      {"lookup": "part", "via": "lineitem",
-      |       "lookupKey": "p_partkey", "foreignKey": "l_partkey",
-      |       "joinType": "left"}
-      |    ],
-      |    "broadcast": ["nation", "region", "supplier", "part"]
-      |  },
-      |  "dims": ["o_month", "r_name", "n_name", "c_mktsegment",
-      |           "o_orderstatus", "l_returnflag", "p_brand"],
-      |  "measures": [
-      |    {"name": "revenue", "family": "sum", "column": "disc_price",
-      |     "presentDouble": true,
-      |     "answersSumExpr": "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"},
-      |    {"name": "qty", "family": "sum", "column": "l_quantity",
-      |     "decimal": true, "presentDouble": true},
-      |    {"name": "nrows", "family": "count"},
-      |    {"name": "qty_min", "family": "min", "column": "l_quantity"},
-      |    {"name": "price_max", "family": "max", "column": "l_extendedprice"},
-      |    {"name": "prio_set", "family": "dim_distinct",
-      |     "column": "o_orderpriority"},
-      |    {"name": "o_year_ext", "family": "max", "column": "o_year",
-      |     "answers": "none"},
-      |    {"name": "cust_bitmap", "family": "bitmap", "column": "o_custkey"},
-      |    {"name": "cust_hll", "family": "hll", "column": "o_custkey"},
-      |    {"name": "brand_topn", "family": "topn",
-      |     "topn": {"dims": ["p_brand"], "valueColumn": "disc_price_micros",
-      |              "sumOf": "disc_price", "scale": 10000}},
-      |    {"name": "brandseg_topn", "family": "topn",
-      |     "topn": {"dims": ["p_brand", "c_mktsegment"],
-      |              "valueColumn": "disc_price_micros",
-      |              "sumOf": "disc_price", "scale": 10000}},
-      |    {"name": "qty_kll", "family": "kll", "column": "l_quantity"},
-      |    {"name": "raw_hi", "family": "raw", "column": "raw_hi_price",
-      |     "answers": "none"},
-      |    {"name": "cname_bitmap", "family": "bitmap", "column": "c_name_id",
-      |     "answers": "none"}
-      |  ],
-      |  "segmentCol": "o_orderdate",
-      |  "segments": [
-      |    {"name": "s1995", "start": "1995-01-01", "end": "1997-01-01"},
-      |    {"name": "s1997", "start": "1997-01-01", "end": "1999-01-01"},
-      |    {"name": "s1999", "start": "1999-01-01", "end": "2001-01-01"},
-      |    {"name": "s2001", "start": "2001-01-01", "end": "2003-01-01"}
-      |  ],
-      |  "cuboids": [
-      |    ["o_month", "r_name", "n_name", "c_mktsegment", "o_orderstatus",
-      |     "l_returnflag", "p_brand"],
-      |    ["r_name", "n_name", "o_orderstatus", "l_returnflag", "o_month"],
-      |    ["o_orderstatus", "l_returnflag", "p_brand"],
-      |    ["o_orderstatus", "l_returnflag"],
-      |    ["r_name", "n_name"],
-      |    ["c_mktsegment", "o_month"],
-      |    ["o_month"]
-      |  ],
-      |  "timeDim": {"name": "o_month", "granularity": "month"},
-      |  "shardBy": "r_name",
-      |  "derived": [
-      |    {"name": "n_nationkey", "host": "n_name", "lookup": "nation"},
-      |    {"name": "n_regionkey", "host": "n_name", "lookup": "nation"}
-      |  ],
-      |  "notNull": ["disc_price", "l_quantity", "l_extendedprice",
-      |              "l_discount"],
-      |  "extended": [
-      |    {"name": "o_year", "host": "o_month", "measure": "o_year_ext"}
-      |  ],
-      |  "segDayGranular": true,
-      |  "dictColumns": ["c_name"]
-      |}""".stripMargin
-
-  test("a JSON declaration equivalent to defaultCube produces an " +
-      "IDENTICAL fingerprint and lattice") {
-    val declared = CubeJson.toCubeDef(CubeJson.parse(starJson))
-    val compiled = CubeManager.defaultCube
-
-    // the lattice: same cuboid id set under the same dim order
-    assert(declared.dims == compiled.dims)
-    assert(declared.cuboids.map(declared.cuboidId).sorted ==
-      compiled.cuboids.map(compiled.cuboidId).sorted,
-      "declared lattice must match the compiled cube's cuboid ids")
-
-    // the full layout fingerprint — measure ALGEBRA included (the
-    // spec constructors call the same builders, so the persisted
-    // fingerprint is byte-identical and a deployment can swap a
-    // compiled cube for its JSON declaration without a rebuild)
-    assert(CubeMeta.fingerprint(declared) == CubeMeta.fingerprint(compiled),
-      "declared fingerprint must equal the compiled cube's")
-
-    // the composite-expression answer (answersSumOf, outside the
-    // fingerprint) canonicalizes to the same tree
-    val tree = (c: org.apache.spark.sql.Column) =>
-      org.apache.spark.sql.graftbridge.ColumnBridge.expressionTree(c)
-    val dRev = declared.measure("revenue").answersSumOf.get
-    val cRev = compiled.measure("revenue").answersSumOf.get
-    assert(ExprCanon.same(tree(dRev), tree(cRev)),
-      "declared answersSumExpr must canonicalize to the compiled tree")
+  /** every part of a built-in cube a declaration must reproduce: the
+    * fingerprint, cuboid and dim order, per-measure algebra (including
+    * the closures outside the fingerprint, rendered on a placeholder
+    * column) and every plain-data field */
+  private def pinOf(c: CubeDef): Seq[String] = {
+    def tree(x: org.apache.spark.sql.Column) =
+      org.apache.spark.sql.graftbridge.ColumnBridge.expressionTree(x)
+    def sqlOf(x: org.apache.spark.sql.Column) =
+      scala.util.Try(tree(x).sql).getOrElse(x.toString)
+    CubeMeta.fingerprint(c).split("[|;]").toSeq.map("fp " + _) ++ Seq(
+      s"cuboids ${c.cuboids.map(c.cuboidId).mkString(",")}",
+      s"dims ${c.dims.mkString(",")}") ++
+    c.measures.map(m => s"measure ${m.name} answers=${m.answers} " +
+      s"sumOf=${m.answersSumOf.flatMap(x => ExprCanon.canon(tree(x)))} " +
+      s"topn=${m.topnShape} heavy=${m.heavyState} " +
+      s"state=${sqlOf(m.fromState("s"))} present=${sqlOf(m.present(col("s")))}") ++
+    Seq(s"derived ${c.derived}", s"extended ${c.extended}",
+      s"notNull ${c.notNull.toSeq.sorted}", s"shardBy ${c.shardBy}",
+      s"timeDim ${c.timeDim.map(t => (t.name, t.toDimValue("2024-01-01"),
+        t.toDimValue("2024-01-15")))}",
+      s"segDayGranular ${c.segDayGranular}",
+      s"dictColumns ${c.dictColumns.toSeq.sorted}",
+      s"sharedDictRoot ${c.sharedDictRoot}",
+      s"segmentCol ${c.segmentCol}", s"segments ${c.segments}")
   }
 
-  test("a declaration colliding with a compiled root refuses at " +
+  /** the built-ins' [[pinOf]] lines and star flat schema, captured
+    * before their compiled declarations became documents */
+  private val StarPin: Seq[String] = Seq(
+    "fp dims=o_month,r_name,n_name,c_mktsegment,o_orderstatus,l_returnflag,p_brand",
+    "fp cuboids=1,6,9,48,55,112,127",
+    "fp measures=revenue:SumOf(disc_price)::sum(disc_price)",
+    "fp qty:SumOf(l_quantity)::sum(CAST(l_quantity AS DECIMAL(18,2)))",
+    "fp nrows:CountAll::count(1)",
+    "fp qty_min:MinOf(l_quantity)::min(l_quantity)",
+    "fp price_max:MaxOf(l_extendedprice)::max(l_extendedprice)",
+    "fp prio_set:CountDistinctOf(o_orderpriority)::collect_set(o_orderpriority)",
+    "fp o_year_ext:::max(o_year)",
+    "fp cust_bitmap:CountDistinctOf(o_custkey)::bitmapaggregator$(o_custkey)",
+    "fp cust_hll:ApproxDistinctOf(o_custkey)::hllaggregator$(o_custkey)",
+    "fp brand_topn::TopNShape(List(p_brand),disc_price,10000):topnaggregator$(p_brand, disc_price_micros)",
+    "fp brandseg_topn::TopNShape(List(p_brand, c_mktsegment),disc_price,10000):topnaggregator$(concat_ws('', p_brand, c_mktsegment), disc_price_micros)",
+    "fp qty_kll:PercentileOf(l_quantity)::kllaggregator$(l_quantity)",
+    "fp raw_hi:::collect_list(raw_hi_price)",
+    "fp cname_bitmap:::bitmapaggregator$(c_name_id)",
+    "fp segCol=o_orderdate",
+    "fp timeDim=o_month",
+    "fp shard=r_name",
+    "fp derived=DerivedDim(n_nationkey,n_name,nation)",
+    "fp DerivedDim(n_regionkey,n_name,nation)",
+    "fp extended=ExtendedColumn(o_year,o_month,o_year_ext)",
+    "fp notNull=disc_price,l_discount,l_extendedprice,l_quantity",
+    "cuboids 127,55,112,48,6,9,1",
+    "dims o_month,r_name,n_name,c_mktsegment,o_orderstatus,l_returnflag,p_brand",
+    "measure revenue answers=Some(SumOf(disc_price)) sumOf=Some((('1' - l_discount) * l_extendedprice)) topn=None heavy=false state=sum(s) present=CAST(s AS DOUBLE)",
+    "measure qty answers=Some(SumOf(l_quantity)) sumOf=None topn=None heavy=false state=sum(s) present=CAST(s AS DOUBLE)",
+    "measure nrows answers=Some(CountAll) sumOf=None topn=None heavy=false state=sum(s) present=s",
+    "measure qty_min answers=Some(MinOf(l_quantity)) sumOf=None topn=None heavy=false state=min(s) present=s",
+    "measure price_max answers=Some(MaxOf(l_extendedprice)) sumOf=None topn=None heavy=false state=max(s) present=s",
+    "measure prio_set answers=Some(CountDistinctOf(o_orderpriority)) sumOf=None topn=None heavy=false state=array_distinct(flatten(collect_list(s))) present=CAST(size(s) AS BIGINT)",
+    "measure o_year_ext answers=None sumOf=None topn=None heavy=false state=max(s) present=s",
+    "measure cust_bitmap answers=Some(CountDistinctOf(o_custkey)) sumOf=None topn=None heavy=false state=bitmapunionaggregator$(s) present=UDF(s)",
+    "measure cust_hll answers=Some(ApproxDistinctOf(o_custkey)) sumOf=None topn=None heavy=true state=hllunionaggregator$(s) present=UDF(s)",
+    "measure brand_topn answers=None sumOf=None topn=Some(TopNShape(List(p_brand),disc_price,10000)) heavy=false state=topnunionaggregator$(s) present=s",
+    "measure brandseg_topn answers=None sumOf=None topn=Some(TopNShape(List(p_brand, c_mktsegment),disc_price,10000)) heavy=false state=topnunionaggregator$(s) present=s",
+    "measure qty_kll answers=Some(PercentileOf(l_quantity)) sumOf=None topn=None heavy=false state=kllunionaggregator$(s) present=UDF(s, 0.5)",
+    "measure raw_hi answers=None sumOf=None topn=None heavy=false state=flatten(collect_list(s)) present=s",
+    "measure cname_bitmap answers=None sumOf=None topn=None heavy=false state=bitmapunionaggregator$(s) present=UDF(s)",
+    "derived List(DerivedDim(n_nationkey,n_name,nation), DerivedDim(n_regionkey,n_name,nation))",
+    "extended List(ExtendedColumn(o_year,o_month,o_year_ext))",
+    "notNull List(disc_price, l_discount, l_extendedprice, l_quantity)",
+    "shardBy Some(r_name)",
+    "timeDim Some((o_month,Some(2024-01),None))",
+    "segDayGranular true",
+    "dictColumns List(c_name)",
+    "sharedDictRoot false",
+    "segmentCol o_orderdate",
+    "segments List(Segment(s1995,1995-01-01,1997-01-01), Segment(s1997,1997-01-01,1999-01-01), Segment(s1999,1999-01-01,2001-01-01), Segment(s2001,2001-01-01,2003-01-01))")
+
+  private val EventsPin: Seq[String] = Seq(
+    "fp dims=ev_day,event_type",
+    "fp cuboids=1,2,3",
+    "fp measures=n_events:CountAll::count(1)",
+    "fp value_sum:SumOf(value)::sum(CAST(value AS DECIMAL(18,2)))",
+    "fp user_bitmap:CountDistinctOf(user_id)::bitmapaggregator$(user_id)",
+    "fp segCol=ts",
+    "fp timeDim=ev_day",
+    "fp shard=",
+    "fp derived=",
+    "fp extended=",
+    "fp notNull=value",
+    "cuboids 3,1,2",
+    "dims ev_day,event_type",
+    "measure n_events answers=Some(CountAll) sumOf=None topn=None heavy=false state=sum(s) present=s",
+    "measure value_sum answers=Some(SumOf(value)) sumOf=None topn=None heavy=false state=sum(s) present=CAST(s AS DOUBLE)",
+    "measure user_bitmap answers=Some(CountDistinctOf(user_id)) sumOf=None topn=None heavy=false state=bitmapunionaggregator$(s) present=UDF(s)",
+    "derived List()",
+    "extended List()",
+    "notNull List(value)",
+    "shardBy None",
+    "timeDim Some((ev_day,Some(2024-01-01),Some(2024-01-15)))",
+    "segDayGranular false",
+    "dictColumns List()",
+    "sharedDictRoot false",
+    "segmentCol ts",
+    "segments List(Segment(s2024m1,2024-01-01,2024-02-01))")
+
+  private val StarFlatDdl: String = Seq(
+    "l_orderkey BIGINT",
+    "l_linenumber INT",
+    "r_name STRING",
+    "n_name STRING",
+    "c_mktsegment STRING",
+    "o_orderstatus STRING",
+    "o_orderpriority STRING",
+    "l_returnflag STRING",
+    "p_brand STRING",
+    "o_month STRING",
+    "o_year STRING",
+    "o_orderdate TIMESTAMP_NTZ",
+    "l_quantity DOUBLE",
+    "o_custkey BIGINT",
+    "l_extendedprice DOUBLE",
+    "l_discount DOUBLE",
+    "disc_price DECIMAL(24,4)",
+    "disc_price_micros BIGINT",
+    "raw_hi_price DOUBLE",
+    "c_name STRING").mkString(",")
+
+  test("the built-in star and events cubes keep their fingerprints, " +
+      "lattices, measure algebra and star flat schema") {
+    def diff(got: Seq[String], want: Seq[String]) =
+      got.zipAll(want, "<none>", "<none>").filter { case (g, w) => g != w }
+    assert(diff(pinOf(CubeManager.defaultCube), StarPin).isEmpty)
+    assert(diff(pinOf(CubeManager.eventsCube), EventsPin).isEmpty)
+    assert(CubeManager.flatTable(spark, sf).schema.toDDL == StarFlatDdl)
+  }
+
+  test("a declaration colliding with a built-in root refuses at " +
       "deploy unless it fingerprints identically") {
-    // a DIFFERING def under the compiled events name would share its
-    // storage root (`<sf>-events`) and ping-pong rebuilds (each side
-    // reads the other's commit as drift). The compiled star lives at
-    // the BARE sf root, so a declared "star" never collides — only
-    // "events" and the hybrid member names are root-coincident.
-    val spec = CubeJson.parse(starJson)
-    val differingEvents = spec.copy(name = "events")
-    assert(intercept[IllegalArgumentException](
-      CubeJson.register(differingEvents)).getMessage
-      .contains("ping-pong"))
+    // a DIFFERING def on a built-in's declared root (`<sf>-events`,
+    // `<sf>-star_old`, `<sf>-star_new`) would ping-pong rebuilds (each
+    // side reads the other's commit as drift). The star lives at the
+    // BARE sf root, so a declared "star" never collides.
+    def refusal(spec: CubeJson.JsonCube): String =
+      intercept[IllegalArgumentException](CubeJson.register(spec)).getMessage
+    assert(refusal(BuiltinCubes.star.copy(name = "events",
+      view = Some("graft_events_differing"))).contains("ping-pong"))
+    // the hybrid member names are declarable now that they are
+    // dash-free — a differing member document refuses the same way
+    assert(refusal(BuiltinCubes.events.copy(name = "star_old",
+      view = Some("graft_star_old_differing"))).contains("ping-pong"))
+    // a fingerprint-identical document may take the layout over
+    assert(CubeJson.register(BuiltinCubes.events.copy(
+      view = Some("graft_events_twin"))) == "graft_events_twin")
+    // scoping onto a built-in's root refuses whatever the fingerprint
+    assert(refusal(BuiltinCubes.events.copy(name = "scoped_events",
+      rootScope = Some("events"))).contains("rootScope 'events'"))
     // storage/SQL-hostile names refuse in validation (a dash would
-    // also make the default view name unparseable SQL — and bans the
-    // hybrid-member root names star-old/star-new as a side effect)
+    // also make the default view name unparseable SQL)
     assert(intercept[IllegalArgumentException](
-      CubeJson.parse(starJson.replace("\"name\": \"star\"",
+      CubeJson.parse(BuiltinCubes.StarJson.replace("\"name\": \"star\"",
         "\"name\": \"my-cube\""))).getMessage.contains("alphanumeric"))
   }
 
@@ -167,7 +198,7 @@ class CubeJsonSpec extends AnyFunSuite {
   }
 
   test("render ∘ parse is the identity on the document") {
-    val spec = CubeJson.parse(starJson)
+    val spec = BuiltinCubes.star
     assert(CubeJson.parse(CubeJson.render(spec)) == spec)
   }
 
@@ -860,14 +891,14 @@ class CubeJsonSpec extends AnyFunSuite {
     Seq("dict", "snapshots", "_backups").foreach(n =>
       assert(intercept[IllegalArgumentException](CubeJson.parse(doc(n)))
         .getMessage.contains("reserved"), s"name '$n' must refuse"))
-    // unscoped 'events' with a foreign fingerprint refuses (compiled
+    // unscoped 'events' with a foreign fingerprint refuses (built-in
     // root collision)...
     assert(intercept[IllegalArgumentException](
       CubeJson.register(CubeJson.parse(doc("events")))).getMessage
-      .contains("compiled events cube"))
+      .contains("built-in 'events' cube"))
     // ...but a SCOPED 'events' lives at <sf>-<scope>/events — disjoint
     // (a custom view name on purpose: the DEFAULT would be
-    // graft_events, and registering it would steal the compiled
+    // graft_events, and registering it would steal the built-in
     // events binding out from under every later suite)
     assert(CubeJson.register(CubeJson.parse(
       doc("events", "\"rootScope\": \"crm\", " +

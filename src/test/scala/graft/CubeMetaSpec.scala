@@ -59,7 +59,7 @@ class CubeMetaSpec extends AnyFunSuite {
       "never a stale route") {
     val root = java.nio.file.Files.createTempDirectory("graft-meta").toString
     val inst = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
     assert(CubeMeta.load(spark, CubeManager.eventsCube, root)
       .exists(_.inst.rows == inst.rows))
 
@@ -82,7 +82,7 @@ class CubeMetaSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-tmp").toString
     val cube = CubeManager.eventsCube
     val inst = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), cube, root)
+      TestSpark.eventsFlat(spark, sf), cube, root)
     assert(CubeMeta.load(spark, cube, root)
       .exists(_.inst.rows == inst.rows))
 
@@ -109,7 +109,7 @@ class CubeMetaSpec extends AnyFunSuite {
 
   test("refreshing one segment replaces its data and commits new meta") {
     val root = java.nio.file.Files.createTempDirectory("graft-refresh").toString
-    val flat = CubeManager.eventsFlat(spark, sf)
+    val flat = TestSpark.eventsFlat(spark, sf)
     val cube = CubeManager.eventsCube
     val inst = CubeBuilder.build(spark, flat, cube, root)
     val before = QueryRouter.route(spark, inst, CubeQuery(

@@ -24,7 +24,7 @@ class CubeMigratorSpec extends AnyFunSuite {
     val dstRoot = freshRoot("dst")
     val cube = CubeManager.eventsCube
     val src = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), cube, srcRoot)
+      TestSpark.eventsFlat(spark, sf), cube, srcRoot)
     val want = revenueByType(src)
     // source garbage (a crashed build's orphan) must NOT travel —
     // migration walks the meta's resource list, not the raw dir
@@ -58,7 +58,7 @@ class CubeMigratorSpec extends AnyFunSuite {
     val srcRoot = freshRoot("ow-src")
     val dstRoot = freshRoot("ow-dst")
     val cube = CubeManager.eventsCube
-    CubeBuilder.build(spark, CubeManager.eventsFlat(spark, sf), cube,
+    CubeBuilder.build(spark, TestSpark.eventsFlat(spark, sf), cube,
       srcRoot)
     CubeMigrator.migrate(spark, cube, srcRoot, dstRoot)
     intercept[IllegalStateException] {

@@ -19,7 +19,7 @@ class DeclaredStreamingSpec extends AnyFunSuite {
 
   /** the SHARED events-cube document (EventQueries.declaredEventsDoc —
     * also the `ev_stream_declared` oracle key's document, so the spec
-    * and the oracle pin the same deployment): the compiled eventsCube's
+    * and the oracle pin the same deployment): the built-in events cube's
     * batch layer plus the declared speed layer at a NON-default
     * window/lateness, pinning that the cadence comes from the document */
   private val doc = graft.queries.EventQueries.declaredEventsDoc
@@ -56,6 +56,18 @@ class DeclaredStreamingSpec extends AnyFunSuite {
       .collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2)))
       .toSeq
     assert(got == want && want.nonEmpty)
+  }
+
+  test("a declared events document reads ts as TIMESTAMP, like the " +
+      "built-in events view") {
+    CubeJson.register(CubeJson.parse(doc))
+    GraftSql.registerViews(spark, sf)
+    val decl = spark.table("graft_events_decl").schema
+    val builtin = spark.table("graft_events").schema
+    assert(decl("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val shared = decl.fieldNames.filter(builtin.fieldNames.contains).toSeq
+    assert(shared.contains("ts") && shared.size == builtin.size)
+    assert(shared.map(decl(_)) == shared.map(builtin(_)))
   }
 
   test("the declared speed layer builds through the document's OWN " +

@@ -140,9 +140,9 @@ class FleetCacheSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-fleet-ext").toString
     val inst = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
     GraftSql.registerBinding(GraftSql.Binding("graft_events_ext",
-      CubeManager.eventsFlat, (_, _) => inst))
+      TestSpark.eventsFlat, (_, _) => inst))
     CubeManager.ensureBuilt(spark, sf)
     withFleetDir { dir =>
       val r = GraftSql.sqlCached(spark, sf,

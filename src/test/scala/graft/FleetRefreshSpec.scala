@@ -42,7 +42,7 @@ class FleetRefreshSpec extends AnyFunSuite {
     val root = a.root
     val loadedB = CubeMeta.load(spark, CubeManager.eventsCube, root)
       .getOrElse(fail("process B must load the committed meta")).inst
-    val febFlat = CubeManager.eventsFlat(spark, dir)
+    val febFlat = TestSpark.eventsFlat(spark, dir)
       .withColumn("ts", col("ts") + expr("INTERVAL 31 DAYS"))
       .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd"))
     val appended = CubeBuilder.appendSegment(spark, loadedB, febFlat,
@@ -63,7 +63,7 @@ class FleetRefreshSpec extends AnyFunSuite {
     val got = QueryRouter.route(spark, b, CubeQuery(
       Seq("event_type"), Seq("n_events" -> "n")))(fail("expected cuboid"))
       .df.agg(sum("n")).head().getLong(0)
-    val jan = CubeManager.eventsFlat(spark, dir).count()
+    val jan = TestSpark.eventsFlat(spark, dir).count()
     val feb = febFlat.filter(
       col("ts") >= lit("2024-02-01").cast("timestamp") &&
       col("ts") < lit("2024-03-01").cast("timestamp")).count()
@@ -128,7 +128,7 @@ class FleetRefreshSpec extends AnyFunSuite {
     val got = QueryRouter.route(spark, b, CubeQuery(
       Seq("event_type"), Seq("n_events" -> "n")))(fail("expected cuboid"))
       .df.agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
-    assert(got > CubeManager.eventsFlat(spark, dir).count(),
+    assert(got > TestSpark.eventsFlat(spark, dir).count(),
       "the routed answer must include the foreign segment's rows")
   }
 

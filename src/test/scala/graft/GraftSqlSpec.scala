@@ -167,7 +167,7 @@ class GraftSqlSpec extends AnyFunSuite {
       """SELECT event_type, sum(value) AS total, count(*) AS n
         |FROM graft_events GROUP BY event_type""".stripMargin)
     assert(r.routed && r.via == "cuboid", s"got ${r.via}")
-    val want = CubeManager.eventsFlat(spark, sf)
+    val want = TestSpark.eventsFlat(spark, sf)
       .groupBy("event_type")
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("total"),
         count(lit(1)).as("n"))
@@ -811,8 +811,8 @@ class GraftSqlSpec extends AnyFunSuite {
         |FROM graft_star_hybrid GROUP BY o_orderstatus""".stripMargin)
     assert(r.routed && r.via == "hybrid", s"got ${r.via}")
     val files = r.df.inputFiles
-    assert(files.exists(_.contains("-star-old/")) &&
-      files.exists(_.contains("-star-new/")),
+    assert(files.exists(_.contains("-star_old/")) &&
+      files.exists(_.contains("-star_new/")),
       s"both member roots must serve, got ${files.take(3).toSeq}")
     val got = r.df.collect()
       .map(x => (x.getString(0), x.getDouble(1), x.getLong(2))).toSet
@@ -833,7 +833,7 @@ class GraftSqlSpec extends AnyFunSuite {
         |GROUP BY o_orderstatus""".stripMargin)
     assert(r.routed && r.via == "hybrid", s"got ${r.via}")
     val files = r.df.inputFiles.filter(_.contains("cuboid="))
-    assert(files.nonEmpty && files.forall(_.contains("-star-old/")),
+    assert(files.nonEmpty && files.forall(_.contains("-star_old/")),
       s"pre-cutover range must stay in the old cube, got ${files.take(3).toSeq}")
     val got = r.df.agg(sum("n_rows")).head().getLong(0)
     val want = CubeManager.flatTable(spark, sf)
@@ -853,8 +853,8 @@ class GraftSqlSpec extends AnyFunSuite {
         |GROUP BY o_orderstatus""".stripMargin)
     assert(r.routed && r.via == "hybrid", s"got ${r.via}")
     val files = r.df.inputFiles
-    assert(files.exists(_.contains("-star-old/")) &&
-      files.exists(_.contains("-star-new/")),
+    assert(files.exists(_.contains("-star_old/")) &&
+      files.exists(_.contains("-star_new/")),
       s"both member roots must serve, got ${files.take(3).toSeq}")
     val got = r.df.agg(sum("n_rows")).head().getLong(0)
     val want = CubeManager.flatTable(spark, sf)
@@ -1064,7 +1064,7 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(r.routed && r.via == "cuboid", s"got ${r.via}")
     val got = r.df.collect()
       .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
-    val want = CubeManager.eventsFlat(spark, sf)
+    val want = TestSpark.eventsFlat(spark, sf)
       .filter(col("ts") >= lit("2024-01-10").cast("timestamp") &&
         col("ts") < lit("2024-01-20").cast("timestamp"))
       .groupBy("event_type")
@@ -1266,8 +1266,8 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(h.routed && h.via == "hybrid", s"got ${h.via}")
     // both member eras contribute (sketch states union across cutover)
     val files = h.df.inputFiles
-    assert(files.exists(_.contains("-star-old/")) &&
-      files.exists(_.contains("-star-new/")))
+    assert(files.exists(_.contains("-star_old/")) &&
+      files.exists(_.contains("-star_new/")))
     val star = GraftSql.sqlVia(spark, sf, sql.format("graft_star"))
     assert(star.via == "topn-measure")
     assert(h.df.collect().toSeq == star.df.collect().toSeq)

@@ -44,7 +44,7 @@ class GraftToolSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-tool").toString
     val v1 = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
 
     // backup prints the id
     val (bc, bout) = runTool("backup", root)
@@ -67,7 +67,7 @@ class GraftToolSpec extends AnyFunSuite {
 
     // a bad append, then restore rolls it back
     CubeBuilder.appendSegment(spark, v1,
-      CubeManager.eventsFlat(spark, sf)
+      TestSpark.eventsFlat(spark, sf)
         .withColumn("ts", col("ts") + expr("INTERVAL 31 DAYS"))
         .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd")),
       Segment("s2024m2", "2024-02-01", "2024-03-01"))

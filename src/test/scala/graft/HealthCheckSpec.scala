@@ -14,7 +14,7 @@ class HealthCheckSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory(s"graft-health-$tag").toString
     val inst = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
     (inst, root)
   }
 
@@ -27,7 +27,7 @@ class HealthCheckSpec extends AnyFunSuite {
       "each surfaced with their remedy") {
     val (inst, root) = build("findings")
     // a hole: append March, skipping February
-    val marFlat = CubeManager.eventsFlat(spark, sf)
+    val marFlat = TestSpark.eventsFlat(spark, sf)
       .withColumn("ts", col("ts") + expr("INTERVAL 62 DAYS"))
       .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd"))
     CubeBuilder.appendSegment(spark, inst, marFlat,
@@ -69,7 +69,7 @@ class HealthCheckSpec extends AnyFunSuite {
       "a fresh build collects ranges for every segment — healthy")
     // append a second segment, then strip ONLY its ranges — the
     // partial state a pre-feature binary or a failed collection leaves
-    val marFlat = CubeManager.eventsFlat(spark, sf)
+    val marFlat = TestSpark.eventsFlat(spark, sf)
       .withColumn("ts", col("ts") + expr("INTERVAL 31 DAYS"))
       .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd"))
     val appended = CubeBuilder.appendSegment(spark, inst, marFlat,

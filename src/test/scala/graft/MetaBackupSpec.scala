@@ -19,12 +19,12 @@ class MetaBackupSpec extends AnyFunSuite {
       .createTempDirectory("graft-backup").toString
     val cube = CubeManager.eventsCube
     val v1 = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), cube, root)
+      TestSpark.eventsFlat(spark, sf), cube, root)
     val id = MetaBackup.backup(spark, root)
     assert(MetaBackup.list(spark, root) == Seq(id))
 
     // the "bad" append
-    val febFlat = CubeManager.eventsFlat(spark, sf)
+    val febFlat = TestSpark.eventsFlat(spark, sf)
       .withColumn("ts", col("ts") + expr("INTERVAL 31 DAYS"))
       .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd"))
     CubeBuilder.appendSegment(spark, v1, febFlat,
@@ -42,7 +42,7 @@ class MetaBackupSpec extends AnyFunSuite {
     val n = QueryRouter.route(spark, back.inst, CubeQuery(
       Seq("event_type"), Seq("n_events" -> "n")))(fail("expected cuboid"))
       .df.agg(sum("n")).head().getLong(0)
-    assert(n == CubeManager.eventsFlat(spark, sf).count())
+    assert(n == TestSpark.eventsFlat(spark, sf).count())
 
     // the appended segment's dir is now unreferenced garbage: the
     // cleaner reclaims it once aged past the grace window
@@ -61,14 +61,14 @@ class MetaBackupSpec extends AnyFunSuite {
       .createTempDirectory("graft-backup2").toString
     val cube = CubeManager.eventsCube
     val v1 = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), cube, root)
+      TestSpark.eventsFlat(spark, sf), cube, root)
     intercept[IllegalArgumentException] {
       MetaBackup.restore(spark, root, "no-such-backup")
     }
     val id = MetaBackup.backup(spark, root)
     val stampBefore = MetaStamp.of(spark, root, cube.name)
     CubeBuilder.appendSegment(spark, v1,
-      CubeManager.eventsFlat(spark, sf)
+      TestSpark.eventsFlat(spark, sf)
         .withColumn("ts", col("ts") + expr("INTERVAL 31 DAYS"))
         .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd")),
       Segment("s2024m2", "2024-02-01", "2024-03-01"))
@@ -96,7 +96,7 @@ class MetaBackupSpec extends AnyFunSuite {
 
   private def badAppend(v1: CubeInstance): Unit = {
     CubeBuilder.appendSegment(spark, v1,
-      CubeManager.eventsFlat(spark, sf)
+      TestSpark.eventsFlat(spark, sf)
         .withColumn("ts", col("ts") + expr("INTERVAL 31 DAYS"))
         .withColumn("ev_day", date_format(col("ts"), "yyyy-MM-dd")),
       Segment("s2024m2", "2024-02-01", "2024-03-01")): Unit
@@ -106,7 +106,7 @@ class MetaBackupSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-backup3").toString
     val ev = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
     val mini = buildMini(root)
     val id = MetaBackup.backup(spark, root)
 
@@ -130,7 +130,7 @@ class MetaBackupSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-backup4").toString
     val ev = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
     buildMini(root)
     val id = MetaBackup.backup(spark, root)
 
@@ -159,7 +159,7 @@ class MetaBackupSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-backup5").toString
     CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
     val id = MetaBackup.backup(spark, root)
     buildMini(root) // committed AFTER the snapshot
     assert(CubeMeta.load(spark, miniDef, root).isDefined)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
@@ -32,6 +32,11 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** the built-in events cube's flat table, through its declared
+    * flat builder */
+  def eventsFlat(s: SparkSession, d: String): DataFrame =
+    graft.cube.CubeJson.flatBuilder(graft.cube.BuiltinCubes.events)(s, d)
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -16,7 +16,7 @@ class StorageCleanerSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory(s"graft-gc-$tag").toString
     val inst = CubeBuilder.build(spark,
-      CubeManager.eventsFlat(spark, sf), CubeManager.eventsCube, root)
+      TestSpark.eventsFlat(spark, sf), CubeManager.eventsCube, root)
     (inst, root)
   }
 
