@@ -155,13 +155,16 @@ object Tables {
     *    naive reading of the same file. */
   def events(s: SparkSession, d: String): DataFrame = {
     val raw = tbl(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+    eventsTs(raw.schema("ts").dataType)
+      .fold(raw)(e => raw.withColumn("ts", expr(e)))
+  }
+  /** the SQL that normalizes an on-disk events `ts` of type `t` (the
+    * catalog events view renders it too); None when it is already a
+    * plain timestamp */
+  def eventsTs(t: DataType): Option[String] = t match {
+    case LongType => Some("timestamp_micros(ts div 1000)")
+    case TimestampNTZType => Some("CAST(ts AS TIMESTAMP)")
+    case _ => None
   }
   /** a model table by name — the one loader declared cubes read
     * through (CubeJson.loadTable), so a declaration over `events` sees

@@ -3,7 +3,7 @@ package graft.cube
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ScanBridge
+import org.apache.spark.sql.graftbridge.{RelationBridge, ScanBridge}
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
 import scala.jdk.CollectionConverters._
@@ -61,35 +61,54 @@ final case class CubeInstance(
   private[graft] def memoizedShapes: Set[String] =
     schemas.keySet.asScala.toSet
 
-  /** The first read of a shape infers its schema; every later read
-    * passes it and runs no job. Files are still listed per read, so a
-    * swapped or vanished dir surfaces exactly as without the memo. */
+  /** The one committed-read builder: one relation over `dirs` (one
+    * per segment, or the snapshot dir), partitioned by the `shard`
+    * dirs under each when given. The first read of a shape infers its
+    * schema from `probe`; every later read passes it and runs no job.
+    * Files are listed per read, so a swapped or vanished dir surfaces
+    * exactly as without the memo: a missing dir fails with
+    * PATH_NOT_FOUND naming it. */
   private def readCommitted(spark: SparkSession, shape: String,
-                            paths: Seq[String]): DataFrame =
-    Option(schemas.get(shape)) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None =>
-        val df = spark.read.parquet(paths: _*)
-        schemas.putIfAbsent(shape, df.schema)
-        df
+                            dirs: Seq[String], shard: Option[String],
+                            probe: String): DataFrame = {
+    val schema = Option(schemas.get(shape)).getOrElse {
+      val s = spark.read.parquet(probe).schema
+      schemas.putIfAbsent(shape, s)
+      s
     }
+    val fs = new Path(probe)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val roots = dirs.map(d => fs.makeQualified(new Path(d)))
+    val leaves = shard match {
+      case None => roots.map(_ -> Nil)
+      case Some(c) => roots.flatMap { d =>
+        val listed = try fs.listStatus(d) catch {
+          case _: java.io.FileNotFoundException =>
+            throw RelationBridge.pathNotFound(d.toString)
+        }
+        val prefix = s"$c="
+        listed.iterator.collect {
+          case st if st.isDirectory &&
+              st.getPath.getName.startsWith(prefix) =>
+            st.getPath -> Seq(st.getPath.getName.drop(prefix.length))
+        }
+      }
+    }
+    RelationBridge.parquet(spark, schema, shard.toSeq, leaves)
+  }
 
-  /** Cuboid `id` over `segs`: one relation over every segment dir (at
-    * thousands of segments one file listing and one scan node, not a
-    * thousand-way union), or one per segment when shard-partitioned
-    * (multi-root reads break partition discovery). With a supplied schema a dir that exists
-    * but holds no data files would read as empty, so a segment the
-    * committed stats count as non-empty must list data files — checked
-    * on the listing the read already made. */
+  /** Cuboid `id` over `segs`: one relation and one scan node over
+    * every segment dir, shard-partitioned or not. With a supplied
+    * schema a dir that exists but holds no data files would read as
+    * empty, so a segment the committed stats count as non-empty must
+    * list data files — checked on the listing the read already made. */
   def readCuboid(spark: SparkSession, id: Long, segs: Seq[String],
                  sharded: Boolean): DataFrame = {
-    val shape = s"cuboid=$id"
-    val paths = segs.map(cuboidPath(_, id))
-    val df =
-      if (sharded)
-        paths.map(p => readCommitted(spark, shape, Seq(p)))
-          .reduce(_ unionByName _)
-      else readCommitted(spark, shape, paths)
+    val probe = segs.find(s => rows.getOrElse((s, id), 0L) > 0)
+      .getOrElse(segs.head)
+    val df = readCommitted(spark, s"cuboid=$id",
+      segs.map(cuboidPath(_, id)), if (sharded) cube.shardBy else None,
+      cuboidPath(probe, id))
     val base = new Path(s"$root/${cube.name}")
     val prefix = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(base).toUri.getPath + "/"
@@ -104,9 +123,10 @@ final case class CubeInstance(
     df
   }
 
-  def readSnapshot(spark: SparkSession, lookup: String): DataFrame =
-    readCommitted(spark, s"snapshots/$lookup",
-      Seq(Snapshot.path(root, lookup)))
+  def readSnapshot(spark: SparkSession, lookup: String): DataFrame = {
+    val dir = Snapshot.path(root, lookup)
+    readCommitted(spark, s"snapshots/$lookup", Seq(dir), None, dir)
+  }
 }
 
 /** Layered spanning-tree cuboid build (reference: CubeBuildJob.java:
@@ -405,10 +425,11 @@ object CubeBuilder {
 
   /** Merge a CONTIGUOUS run of segments into one (the general form of
     * the reference's merge job — Kylin merges adjacent segments, never
-    * ranges with a hole): per cuboid, union the run's parquet and
-    * re-aggregate states with the same fromState exprs used in the
-    * layered build. Untouched segments keep their dirs and row counts;
-    * the returned instance swaps the run for the merged segment.
+    * ranges with a hole): per cuboid, read the run's parquet as one
+    * relation and re-aggregate states with the same fromState exprs
+    * used in the layered build. Untouched segments keep their dirs and
+    * row counts; the returned instance swaps the run for the merged
+    * segment.
     * STEP-RESUMABLE like [[build]]: the merge ATTEMPT — identified by
     * the def fingerprint, the run, AND the base buildId it merges
     * from — markers each completed merged-cuboid dir, so a crashed
@@ -452,8 +473,8 @@ object CubeBuilder {
             throw new IllegalStateException(
               "graft-spec: injected build crash")
           val dimCols = cube.cuboidDims(c).map(col)
-          val paths = run.map(s => inst.cuboidPath(s.name, id))
-          val df = paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
+          val df = inst.readCuboid(spark, id, run.map(_.name),
+              sharded = cube.shardBy.exists(c.contains))
             .groupBy(dimCols: _*).agg(reAggs.head, reAggs.tail: _*)
           val obs = Observation()
           val n = timed("merge", s"${cube.name}/$mergedName/$id") {

@@ -57,18 +57,19 @@ object GraftCatalog {
     }
   private[graft] def memoSize: Int = registered.synchronized(registered.size)
 
-  /** the star flat table as view SQL, rendered from the built-in
-    * document's joins and flat columns — the lists
-    * CubeManager.flatTableFrom builds from (CatalogSpec pins frame
-    * equality). Column names are unique across the star's tables, so
-    * they need no qualifier. */
-  private def flatViewSql(j: CubeJson.JsonCube): String = {
+  /** a built-in document's flat table as view SQL over `fact` (the
+    * fact table, or a normalizing subquery aliased to its name),
+    * rendered from the document's joins and flat columns — the lists
+    * its flat builder builds from (CatalogSpec pins the star frames
+    * equal and the events view's columns). Column names are unique
+    * across the star's tables, so they need no qualifier. */
+  private def flatViewSql(j: CubeJson.JsonCube, fact: String): String = {
     val cols = j.flatColumns.map(fc =>
       fc.expr.fold(fc.name)(e => s"$e AS ${fc.name}"))
     val joins = j.model.edges.map(e =>
       s"${if (e.joinType == "left") "LEFT JOIN" else "JOIN"} " +
         s"$Db.${e.lookup} ON ${e.lookupKey} = ${e.foreignKey}")
-    (s"SELECT ${cols.mkString(", ")} FROM $Db.${j.model.fact}" +: joins)
+    (s"SELECT ${cols.mkString(", ")} FROM $fact" +: joins)
       .mkString("\n") + j.model.filterExpr.fold("")(f => s"\nWHERE $f")
   }
 
@@ -88,27 +89,21 @@ object GraftCatalog {
         spark.sql(s"CREATE TABLE $Db.$t USING parquet " +
           s"LOCATION '$sfDir/$t.parquet'")
       }
+      val star = BuiltinCubes.star
       spark.sql(
         s"CREATE OR REPLACE VIEW $Db.${GraftSql.ViewName} AS " +
-          flatViewSql(BuiltinCubes.star))
-      // the events flat view needs the same ts normalization as
-      // Tables.events (the generator's physical form varies: nanos
-      // long / micros-NTZ / UTC timestamp) — generate the cast from
-      // the on-disk schema, read once from footers at registration
-      val tsExpr = graft.Tables.tbl(spark, sfDir, "events")
-        .schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          "timestamp_micros(ts div 1000)"
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          "CAST(ts AS TIMESTAMP)"
-        case _ => "ts"
-      }
+          flatViewSql(star, s"$Db.${star.model.fact}"))
+      // the events view reads its fact through Tables.events' ts
+      // normalization, chosen from the on-disk type (read once from
+      // footers at registration)
+      val events = BuiltinCubes.events.model.fact
+      val fact = graft.Tables.eventsTs(
+        graft.Tables.tbl(spark, sfDir, events).schema("ts").dataType)
+        .fold(s"$Db.$events")(ts =>
+          s"(SELECT $ts AS ts, * EXCEPT (ts) FROM $Db.$events) AS $events")
       spark.sql(
-        s"""CREATE OR REPLACE VIEW $Db.${GraftSql.EventsViewName} AS
-           |SELECT $tsExpr AS ts,
-           |  date_format($tsExpr, 'yyyy-MM-dd') AS ev_day,
-           |  event_type, user_id, value
-           |FROM $Db.events""".stripMargin)
+        s"CREATE OR REPLACE VIEW $Db.${GraftSql.EventsViewName} AS " +
+          flatViewSql(BuiltinCubes.events, fact))
       memoPut(key, sfDir)
     }
   }

@@ -54,6 +54,63 @@ object DatasetBridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
 
+/** One parquet relation built directly over committed dirs: what
+  * `spark.read.schema(s).parquet(dirs: _*)` resolves to, without
+  * DataSource's per-read provider lookup, Hadoop conf copies, path
+  * checks and partition inference (QueryCompilationErrors is
+  * private[sql], hence the missing-path error lives here too). */
+object RelationBridge {
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+  import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+  import org.apache.spark.sql.errors.QueryCompilationErrors
+  import org.apache.spark.sql.execution.datasources._
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import org.apache.spark.sql.types.{DataType, StructType}
+
+  /** `leaves` are the qualified dirs holding the data files, each with
+    * its raw dir-name value per column of `partCols` (columns of
+    * `schema`, in order): values are unescaped, typed from `schema`,
+    * and the default-partition name reads as null. The leaves are
+    * listed here, once, with no file-status cache. A root-level
+    * listing skips a missing dir silently, so a leaf that lists no
+    * file and no longer exists fails as a missing read path does. */
+  def parquet(spark: SparkSession, schema: StructType, partCols: Seq[String],
+              leaves: Seq[(Path, Seq[String])]): DataFrame = {
+    val partSchema = StructType(partCols.map(schema(_)))
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    def typed(raw: String, t: DataType): Any =
+      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+      else Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)), t, tz)
+        .eval()
+    val spec = PartitionSpec(partSchema,
+      if (partCols.isEmpty) Nil
+      else leaves.map { case (dir, raw) =>
+        PartitionPath(InternalRow.fromSeq(
+          raw.zip(partSchema).map { case (v, f) => typed(v, f.dataType) }),
+          dir)
+      })
+    val dirs = leaves.map(_._1)
+    val index = new InMemoryFileIndex(spark, dirs, Map.empty, Some(schema),
+      NoopCache, Some(spec))
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val listed = index.allFiles().iterator.map(_.getPath.getParent).toSet
+    dirs.filterNot(listed)
+      .find(d => !d.getFileSystem(conf).exists(d))
+      .foreach(d => throw pathNotFound(d.toString))
+    val rel = HadoopFsRelation(index, partSchema,
+      StructType(schema.filterNot(f => partCols.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(spark)
+    DatasetBridge.ofRows(spark, LogicalRelation(rel))
+  }
+
+  /** Spark's own error for a read path that does not exist */
+  def pathNotFound(path: String): Throwable =
+    QueryCompilationErrors.dataPathNotExistError(path)
+}
+
 /** Scan-provenance helper: the file paths a frame's ANALYZED plan
   * reads. `Dataset.inputFiles` consults the cache-substituted plan, so
   * a persisted frame (or one whose plan the CacheManager matched)

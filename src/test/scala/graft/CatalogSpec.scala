@@ -29,6 +29,17 @@ class CatalogSpec extends AnyFunSuite {
       "catalog view and flatTableFrom must hold identical rows")
   }
 
+  test("the graft_cat.graft_events view's columns and types are the " +
+      "events flat table's") {
+    GraftCatalog.register(spark, sf)
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    val view = cols(spark.table(
+      s"${GraftCatalog.Db}.${GraftSql.EventsViewName}"))
+    assert(view == cols(TestSpark.eventsFlat(spark, sf)) && view.nonEmpty,
+      s"view columns $view")
+  }
+
   test("a catalog-addressed star join routes to the cube") {
     GraftCatalog.register(spark, sf)
     val r = GraftSql.sqlVia(spark, sf,
