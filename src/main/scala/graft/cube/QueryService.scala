@@ -1,29 +1,30 @@
 package graft.cube
 
-import java.util.concurrent.{Executors, ScheduledFuture, TimeUnit}
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.graftbridge.ConfBridge
 
 /** Query-server execution hygiene (reference: kylin-spark-project/
   * kylin-spark-query/src/main/scala/org/apache/spark/sql/execution/
   * ResultPlan.scala:66-123 — every served query runs under a Spark job
-  * group named by its query id, with a scheduler pool and a per-query
-  * shuffle-partition count picked from the plan's scan size, a timeout
-  * that cancels the job group, and a row cap; SparkSqlClient.java caps
+  * group named by its query id, with a scheduler pool picked from the
+  * plan's scan size, a timeout that cancels the job group, and a row
+  * cap; SparkSqlClient.java caps
   * returned rows; QueryMetricUtils.scala collects per-query scan
   * rows/bytes from the executed plan).
   *
   * graft's version wraps the two programmatic serving entry points
   * (GraftSql.sqlVia / sqlCached) with:
-  *  - `setJobGroup(graft-query-<id>, sql, interruptOnCancel = true)`
-  *    BEFORE routing, so even the router's own metadata probes (TopN
-  *    trimmed-state checks) are attributable and cancellable;
+  *  - job group `graft-query-<id>` (or the caller's group, when one
+  *    is set) with task interruption on cancel, BEFORE routing, so
+  *    even the router's own metadata probes (TopN trimmed-state
+  *    checks) are attributable and cancellable;
   *  - a FAIR-scheduler pool chosen AFTER routing from the plan's
   *    estimated cuboid scan rows (`SqlResult.estRows`): small routed
   *    scans share `lightweight_tasks`, big ones — and routed plans
@@ -32,13 +33,6 @@ import org.apache.spark.sql.graftbridge.ConfBridge
   *    reference's pool names, ResultPlan.scala:66). Pools take effect
   *    under `spark.scheduler.mode=FAIR`; under FIFO the property is
   *    inert but harmless.
-  *  - per-query shuffle partitions (ResultPlan.scala:68-79,86 parity):
-  *    a routed plan with a row estimate plans its exchanges at
-  *    `min(estRows / PartitionSplitRows + 1, totalCores)` via a
-  *    thread-local SQLConf override — a dashboard point-query must not
-  *    pay the session-wide partition count sized for fact scans, and a
-  *    shared serving session must not be mutated per query. Pushdown
-  *    and unknown-size plans keep the session default.
   *  - a result-row cap enforced by collecting at most cap+1 rows
   *    (`LIMIT cap+1` — the driver never materializes an unbounded
   *    result) and REFUSING (ResultCapExceeded) when the cap is hit,
@@ -46,9 +40,10 @@ import org.apache.spark.sql.graftbridge.ConfBridge
   *    truncation.
   *  - an optional deadline (ResultPlan.scala:115-123 — the reference
   *    turns an InterruptedException into cancelJobGroup +
-  *    KylinTimeoutException on `kylin.query.timeout-seconds`): when
-  *    `timeout` elapses the service cancels the query's own job group
-  *    and surfaces a typed QueryTimedOut; concurrent queries run on.
+  *    KylinTimeoutException on `kylin.query.timeout-seconds`): once
+  *    `timeout` elapses the service cancels the query's own job group,
+  *    again every 2 s until the query ends, and surfaces a typed
+  *    QueryTimedOut; concurrent queries run on.
   *  - per-query scan metrics (QueryMetricUtils parity): scanRows /
   *    scanBytes summed over the executed plan's file scans, carried on
   *    the returned `Served` and recorded by `QueryLog.served` — actuals,
@@ -70,8 +65,10 @@ import org.apache.spark.sql.graftbridge.ConfBridge
   * `spark.graft.serve.guard=true` wraps every JDBC statement in a
   * guard node enforcing the cap (`spark.graft.serve.maxRows`), the
   * session deadline (`spark.graft.query.timeoutSeconds`), and the
-  * router-chosen pool — so both consumption points (programmatic
-  * `run` here, JDBC there) refuse identically.
+  * router-chosen pool. Both consumption points (programmatic `run`
+  * here, JDBC there) execute inside the one window `guarded` — job
+  * group, pool, interruption and deadline are set up and torn down in
+  * one place — so they refuse identically.
   */
 object QueryService {
 
@@ -88,12 +85,12 @@ object QueryService {
     * count vs the parallelism it considers "light") */
   val HeavyRowThreshold = 1000000L
 
-  /** planned cuboid rows per post-shuffle partition when sizing a
-    * routed query's exchanges (the reference sizes from scan BYTES /
+  /** planned cuboid rows per partition when the router coalesces a
+    * light routed scan (the reference sizes from scan BYTES /
     * PARTITION_SPLIT_BYTES, ResultPlan.scala:68-79; the router carries
     * a row estimate, and cuboid cells are narrow — a few hundred
-    * thousand rows per partition keeps each reducer well inside
-    * executor memory while never planning more waves than cores) */
+    * thousand rows per partition keeps each task well inside executor
+    * memory) */
   val PartitionSplitRows = 250000L
 
   /** default result-row cap — Kylin's kylin.query.max-return-rows */
@@ -104,12 +101,13 @@ object QueryService {
     * deployment arms every served query without touching call sites */
   val TimeoutConf = "spark.graft.query.timeoutSeconds"
 
-  private def effectiveTimeout(spark: SparkSession,
-                               timeout: Duration): Duration =
-    if (timeout.isFinite) timeout
-    else scala.util.Try(spark.conf.get(TimeoutConf).toLong).toOption
+  /** the session's deadline from [[TimeoutConf]], read the same way by
+    * both consumption points: unset, non-positive or unparseable means
+    * no deadline (`Duration.Inf`) */
+  def confTimeout(spark: SparkSession): Duration =
+    scala.util.Try(spark.conf.get(TimeoutConf).toLong).toOption
       .filter(_ > 0)
-      .map(s => Duration(s, java.util.concurrent.TimeUnit.SECONDS))
+      .map(s => Duration(s, TimeUnit.SECONDS))
       .getOrElse(Duration.Inf)
 
   /** pool choice (reference semantics): un-routed source scans belong
@@ -121,17 +119,6 @@ object QueryService {
     else estRows match {
       case Some(n) if n <= HeavyRowThreshold => LightPool
       case _ => HeavyPool
-    }
-
-  /** per-query shuffle-partition override: only routed plans with a
-    * row estimate are resized (pushdown keeps the session default —
-    * its scan size is unknown to the router by definition) */
-  def shufflePartitionsFor(spark: SparkSession, routed: Boolean,
-                           estRows: Option[Long]): Option[Int] =
-    if (!routed) None
-    else estRows.map { est =>
-      val cores = spark.sparkContext.defaultParallelism.toLong
-      math.max(1L, math.min(est / PartitionSplitRows + 1, cores)).toInt
     }
 
   final class ResultCapExceeded(val queryId: String, val cap: Int)
@@ -154,30 +141,27 @@ object QueryService {
     * re-charging the cache build's reads to every hit (ADVICE r12). */
   final case class Served(queryId: String, rows: Array[Row],
       routed: Boolean, via: String, pool: String,
-      shufflePartitions: Option[Int] = None,
       scanRows: Long = 0L, scanBytes: Long = 0L,
       fromCache: Boolean = false)
 
-  /** ids cancelled by `cancel` (user) / the deadline (timeout) — the
-    * classifier keys on membership, never on exception-message text:
-    * an unrelated failure that happens to say "cancelled" propagates
-    * as itself (ADVICE r11). `activeIds` registers queries currently
-    * inside `run`: a cancel of a finished or unknown id must not park
-    * a mark that misclassifies the NEXT run reusing the id (ADVICE
-    * r12) — marks are only taken for active ids, and mark-vs-cleanup
-    * ordering is serialized by `idLock`. */
+  /** ids cancelled by `cancel` — the classifier keys on membership,
+    * never on exception-message text: an unrelated failure that
+    * happens to say "cancelled" propagates as itself (ADVICE r11).
+    * `activeIds` maps each query currently inside `run` to the job
+    * group its jobs run under: a cancel of a finished or unknown id
+    * must not park a mark that misclassifies the NEXT run reusing the
+    * id (ADVICE r12) — marks are only taken for active ids, and
+    * mark-vs-cleanup ordering is serialized by `idLock`. A deadline
+    * takes no mark: the window that armed it carries its own flag. */
   private val idLock = new Object
   private val activeIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val cancelledIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val timedOutIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** one shared deadline timer for all served queries — arming a
-    * timeout costs a heap entry, not a thread. Shared with the
-    * Thriftserver-path guard (plans.ServeGuardExec). */
-  private[graft] lazy val deadlines =
+    * timeout costs a heap entry, not a thread */
+  private lazy val deadlines =
     Executors.newSingleThreadScheduledExecutor(
     (r: Runnable) => {
       val t = new Thread(r, "graft-query-deadline")
@@ -185,10 +169,83 @@ object QueryService {
       t
     })
 
+  private val GroupProp = "spark.jobGroup.id"
+  private val PoolProp = "spark.scheduler.pool"
+  private val InterruptProp = "spark.job.interruptOnCancel"
+
+  /** an open [[guarded]] window: the job group its jobs run under, and
+    * whether its deadline has fired */
+  final class Window private[QueryService] (val group: String) {
+    @volatile private var fired = false
+    private var open = true
+    def timedOut: Boolean = fired
+    private[QueryService] def expire(sc: SparkContext): Unit = synchronized {
+      if (open) { fired = true; sc.cancelJobGroup(group) }
+    }
+    private[QueryService] def close(): Unit = synchronized { open = false }
+  }
+
+  /** The one guarded execution window around a served query — both
+    * consumption points (`run` and the JDBC `plans.ServeGuardExec`)
+    * execute inside it (ResultPlan.scala:60-123 parity):
+    *  - job group: the caller's when one is set (the Thriftserver's
+    *    statement group), else `ownGroup`; only a group set here is
+    *    cleared on exit;
+    *  - `spark.job.interruptOnCancel=true`, so a cancel interrupts even
+    *    a task blocked in user code (the Thriftserver registers its
+    *    group without interruption, spark.sql.thriftServer.forceCancel);
+    *  - scheduler pool `pool`, which the body may re-pick; the previous
+    *    pool and interrupt setting are restored on exit;
+    *  - a finite `deadline` cancels the group once it elapses and again
+    *    every 2 s until the window closes: a one-shot cancel that fires
+    *    before the first job launches (during routing, say) is a no-op,
+    *    and the query would run to completion. A query whose deadline
+    *    fired throws QueryTimedOut (named `queryId`, else the group),
+    *    even when the body returned rows.
+    * Closing the window disarms the timer under the window's lock, so
+    * no cancel of the group runs after it closed — the next query
+    * reusing the id (or statement group) keeps its jobs. Not Spark's
+    * `cancelJobGroupAndFutureJobs`: the scheduler remembers those
+    * group ids, and query ids are reused. */
+  private[graft] def guarded[T](sc: SparkContext, ownGroup: => String,
+      description: String, queryId: Option[String], pool: String,
+      deadline: Duration)(body: Window => T): T = {
+    val provided = Option(sc.getLocalProperty(GroupProp))
+    val prevPool = sc.getLocalProperty(PoolProp)
+    val prevInterrupt = sc.getLocalProperty(InterruptProp)
+    val group = provided.getOrElse {
+      val g = ownGroup
+      sc.setJobGroup(g, description, interruptOnCancel = true)
+      g
+    }
+    sc.setLocalProperty(InterruptProp, "true")
+    sc.setLocalProperty(PoolProp, pool)
+    val w = new Window(group)
+    val armed =
+      if (!deadline.isFinite) None
+      else Some(deadlines.scheduleWithFixedDelay(() => w.expire(sc),
+        deadline.toMillis, 2000L, TimeUnit.MILLISECONDS))
+    def timedOut(cause: Throwable) =
+      new QueryTimedOut(queryId.getOrElse(group), deadline, cause)
+    try {
+      val out = body(w)
+      if (w.timedOut) throw timedOut(null)
+      out
+    } catch {
+      case e: Throwable if w.timedOut && !e.isInstanceOf[QueryTimedOut] =>
+        throw timedOut(e)
+    } finally {
+      w.close()
+      armed.foreach(_.cancel(false))
+      if (provided.isEmpty) sc.clearJobGroup()
+      sc.setLocalProperty(PoolProp, prevPool)
+      sc.setLocalProperty(InterruptProp, prevInterrupt)
+    }
+  }
+
   /** Serve one query under full concurrency hygiene. `cached = true`
     * goes through the result cache (sqlCached); routing, pool choice,
-    * partition sizing, cap, timeout and cancellation behave
-    * identically on both paths. */
+    * cap, timeout and cancellation behave identically on both paths. */
   def run(spark: SparkSession, sfDir: String, sql: String, queryId: String,
           maxRows: Int = DefaultMaxRows, cached: Boolean = true,
           timeout: Duration = Duration.Inf): Served =
@@ -230,67 +287,46 @@ object QueryService {
     // drop any stale routing handoff a prior (failed) run left on this
     // thread — the served record below must describe THIS query
     QueryRouter.QueryStats.takeForThread(): Unit
-    val deadline = effectiveTimeout(spark, timeout)
     val sc = spark.sparkContext
-    activeIds.add(queryId)
-    sc.setJobGroup(GroupPrefix + queryId, sql.take(256),
-      interruptOnCancel = true)
-    // provisional pool for the router's own metadata probes (they are
-    // attributable via the job group already; this makes them
-    // pool-weighted too, VERDICT r11) — re-chosen from the plan's
-    // estimate once routing returns
-    sc.setLocalProperty("spark.scheduler.pool", LightPool)
-    val armed: Option[ScheduledFuture[_]] =
-      if (!deadline.isFinite) None
-      else Some(deadlines.schedule(new Runnable {
-        override def run(): Unit = {
-          timedOutIds.add(queryId)
-          cancel(spark, queryId)
-        }
-      }, deadline.toMillis, TimeUnit.MILLISECONDS))
-    try {
+    val deadline = if (timeout.isFinite) timeout else confTimeout(spark)
+    // the provisional pool weights the router's own metadata probes
+    // (VERDICT r11); it is re-chosen from the plan's estimate once
+    // routing returns
+    val (r, trace, rows, pool, limited) = guarded(sc, GroupPrefix + queryId,
+        sql.take(256), Some(queryId), LightPool, deadline) { w =>
+      idLock.synchronized { activeIds.put(queryId, w.group); () }
+      def cancelled = cancelledIds.contains(queryId)
       // the RETRYABLE section: route + collect only. The recording
       // tail (QueryLog.served, whose due-flush does its own parquet
-      // I/O) runs ONCE, after the retry block — a vanished-file error
-      // from the log store must never re-execute an already-successful
+      // I/O) runs ONCE, after the window — a vanished-file error from
+      // the log store must never re-execute an already-successful
       // query and double-record it.
-      def attempt()
-          : (GraftSql.SqlResult, Seq[RouteTrace.Entry], Array[Row],
-             String, Option[Int], org.apache.spark.sql.DataFrame) = {
+      def attempt() = {
         // collect the route trace so a fallback can say WHY (same
         // BadQueryDetector posture as the JDBC guard; a routed result —
         // cached ones are always routed — carries no reason)
         val (r, trace) = RouteTrace.collect(
           if (cached) GraftSql.sqlCached(spark, sfDir, sql)
           else GraftSql.sqlVia(spark, sfDir, sql))
-        val est = if (r.routed) r.estRows else None
-        val pool = poolFor(r.routed, est)
-        sc.setLocalProperty("spark.scheduler.pool", pool)
-        val parts = shufflePartitionsFor(spark, r.routed, est)
+        val pool = poolFor(r.routed, if (r.routed) r.estRows else None)
+        sc.setLocalProperty(PoolProp, pool)
         val limited = r.df.limit(maxRows + 1)
         // serving-boundary: the bounded cap+1 materialization handing a
         // finished result to the client (ResultPlan.scala:94 parity)
-        val rows = ConfBridge.withShufflePartitions(spark, parts) {
-          limited.collect() // serving-boundary: cap+1
-        }
+        val rows = limited.collect() // serving-boundary: cap+1
         if (rows.length > maxRows)
           throw new ResultCapExceeded(queryId, maxRows)
-        // a deadline (or cancel) that fired while no Spark job was
-        // active is a no-op for cancelJobGroup — the collect can still
-        // complete normally, so the contract is enforced here too: a
-        // query whose deadline elapsed must not return a result
-        if (timedOutIds.contains(queryId))
-          throw new QueryTimedOut(queryId, deadline, null)
-        if (cancelledIds.contains(queryId))
-          throw new QueryCancelled(queryId, null)
-        (r, trace, rows, pool, parts, limited)
+        // a cancel that landed while no Spark job was active is a no-op
+        // for cancelJobGroup — the collect can still complete normally,
+        // so a cancelled query must not return a result either
+        if (cancelled) throw new QueryCancelled(queryId, null)
+        (r, trace, rows, pool, limited)
       }
-      val (r, trace, rows, pool, parts, limited) =
+      try {
         try attempt()
         catch {
           case e: Throwable if vanishedUnder(e, CubeManager.cubeRoot) &&
-              !timedOutIds.contains(queryId) &&
-              !cancelledIds.contains(queryId) =>
+              !w.timedOut && !cancelled =>
             // a refresh / snapshot-rebuild swap moved committed dirs
             // between this query's plan (which pinned concrete file
             // paths) and its scan — the documented two-rename reader
@@ -309,63 +345,47 @@ object QueryService {
             }
             // a deadline/cancel that fired DURING the backoff must not
             // buy a whole second execution past it — rethrow the
-            // original; the outer classifiers map it
-            if (timedOutIds.contains(queryId) ||
-                cancelledIds.contains(queryId)) throw e
+            // original; the classifiers map it
+            if (w.timedOut || cancelled) throw e
             attempt()
         }
-      // a result-cache hit read zero files — reporting the cached
-      // plan's build metrics would overstate every hit's scan work
-      // (ADVICE r12); hits report 0/0 and carry the fromCache flag
-      val (scanRows, scanBytes) =
-        if (r.fromCache) (0L, 0L)
-        else scanMetrics(limited.queryExecution.executedPlan)
-      // the route that answered this query handed its (cube, dims)
-      // off on this thread; a fallback carries its traced reason and
-      // the routing pass's misses instead
-      QueryLog.served(spark, queryId, QueryLog.Route.take(r.routed, r.via,
-        GraftSql.summarizeTrace(trace)), scanRows, scanBytes)
-      Served(queryId, rows, r.routed, r.via, pool, parts, scanRows,
-        scanBytes, r.fromCache)
-    } catch {
-      case e: Throwable if timedOutIds.contains(queryId) =>
-        throw new QueryTimedOut(queryId, deadline, e)
-      case e: Throwable if cancelledIds.contains(queryId) =>
-        throw new QueryCancelled(queryId, e)
-    } finally {
-      // cancel the deadline, then WAIT for it if it already started:
-      // removing the id entries while the runnable is mid-flight would
-      // let it re-add them after cleanup — leaking a stale timed-out
-      // mark that misclassifies the next query reusing this id (and
-      // whose cancelJobGroup could kill that query's jobs)
-      armed.foreach { f =>
-        f.cancel(false)
-        try { f.get(); () } catch { case _: Exception => () }
+      } catch {
+        case e: Throwable if cancelled && !e.isInstanceOf[QueryCancelled] =>
+          throw new QueryCancelled(queryId, e)
+      } finally {
+        // deregister-then-clear under the lock: a concurrent cancel()
+        // that saw this id active must not re-mark it after the clear
+        idLock.synchronized {
+          activeIds.remove(queryId)
+          cancelledIds.remove(queryId)
+        }
       }
-      // deregister-then-clear under the lock: a concurrent cancel()
-      // that saw this id active must not re-mark it after the clear
-      idLock.synchronized {
-        activeIds.remove(queryId)
-        cancelledIds.remove(queryId)
-        timedOutIds.remove(queryId)
-      }
-      sc.setLocalProperty("spark.scheduler.pool", null)
-      sc.clearJobGroup()
     }
+    // a result-cache hit read zero files — reporting the cached
+    // plan's build metrics would overstate every hit's scan work
+    // (ADVICE r12); hits report 0/0 and carry the fromCache flag
+    val (scanRows, scanBytes) =
+      if (r.fromCache) (0L, 0L)
+      else scanMetrics(limited.queryExecution.executedPlan)
+    // the route that answered this query handed its (cube, dims)
+    // off on this thread; a fallback carries its traced reason and
+    // the routing pass's misses instead
+    QueryLog.served(spark, queryId, QueryLog.Route.take(r.routed, r.via,
+      GraftSql.summarizeTrace(trace)), scanRows, scanBytes)
+    Served(queryId, rows, r.routed, r.via, pool, scanRows, scanBytes,
+      r.fromCache)
   }
 
   /** kill every job of a served query; interruptOnCancel interrupts
     * its running tasks (ResultPlan's cancelJobGroup path). Only a
-    * CURRENTLY-ACTIVE id takes the cancellation mark — cancelling a
-    * finished or unknown id must not leak a mark that fails the next
-    * run reusing the id after its collect completes (ADVICE r12); the
-    * group cancel below is a no-op for such ids either way. */
-  def cancel(spark: SparkSession, queryId: String): Unit = {
+    * CURRENTLY-ACTIVE id takes the cancellation mark and has its group
+    * cancelled — cancelling a finished or unknown id must not leak a
+    * mark that fails the next run reusing the id after its collect
+    * completes (ADVICE r12). */
+  def cancel(spark: SparkSession, queryId: String): Unit =
     idLock.synchronized {
-      if (activeIds.contains(queryId)) { cancelledIds.add(queryId); () }
-    }
-    spark.sparkContext.cancelJobGroup(GroupPrefix + queryId)
-  }
+      Option(activeIds.get(queryId)).map { g => cancelledIds.add(queryId); g }
+    }.foreach(spark.sparkContext.cancelJobGroup)
 
   /** actual rows/bytes read by the executed plan's file scans —
     * reference: QueryMetricUtils.collectScanMetrics (numOutputRows +
@@ -379,7 +399,7 @@ object QueryService {
     * wrappers plain `collect` treats as leaves: AQE's finalized plan
     * holds materialized stages as QueryStageExec whose inner plan (and
     * the real scan/exchange nodes) is a member, not a child */
-  private def flatten(p: org.apache.spark.sql.execution.SparkPlan)
+  private[graft] def flatten(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     val below = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -407,8 +427,8 @@ object QueryService {
     (scans.map(_._1).sum, scans.map(_._2).sum)
   }
 
-  /** largest exchange width in the executed plan — what the
-    * per-query sizing spec asserts on */
+  /** largest exchange width in the executed plan (descending into a
+    * cached result's plan) — what the routed-width spec asserts on */
   def plannedShufflePartitions(
       plan: org.apache.spark.sql.execution.SparkPlan): Option[Int] = {
     val widths = flatten(plan).collect {

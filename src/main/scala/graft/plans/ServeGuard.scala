@@ -1,8 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.TimeUnit
-import java.util.concurrent.atomic.AtomicBoolean
-
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.rdd.RDD
@@ -29,10 +26,11 @@ import graft.cube.{GraftSql, QueryLog, QueryRouter, QueryService}
   * analyzed user query is wrapped in a [[ServeGuard]] node whose
   * physical operator IS the consumption point — it materializes at
   * most cap+1 rows driver-side (exactly the reference's guarded
-  * `df.collect()`), REFUSES past the cap, arms the shared deadline
-  * timer against the statement's own job group (the Thriftserver sets
-  * one per statement, so a timeout kills only that statement's jobs),
-  * and schedules the statement in the pool the router chose.
+  * `df.collect()`), REFUSES past the cap, and runs inside the same
+  * guarded window as QueryService.run: the deadline cancels the
+  * statement's own job group (the Thriftserver sets one per statement,
+  * so a timeout kills only that statement's jobs), and the statement
+  * is scheduled in the pool the router chose.
   *
   * Deployment:
   * {{{
@@ -61,9 +59,6 @@ final case class ServeGuardRule(session: SparkSession)
     extends Rule[LogicalPlan] {
   import ServeGuardRule._
 
-  private def confLong(key: String, dflt: Long): Long =
-    scala.util.Try(session.conf.get(key).toLong).getOrElse(dflt)
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (session.conf.get(EnableConf, "false") != "true") return plan
     if (GraftSql.internalAnalysis) return plan
@@ -81,10 +76,9 @@ final case class ServeGuardRule(session: SparkSession)
         val stripped = plan.transformUp {
           case g: ServeGuard => g.child
         }
-        val cap = math.max(1L, confLong(MaxRowsConf,
-          QueryService.DefaultMaxRows.toLong))
-        val timeoutSec =
-          math.max(0L, confLong(QueryService.TimeoutConf, 0L))
+        val cap = math.max(1L, scala.util.Try(
+          session.conf.get(MaxRowsConf).toLong)
+          .getOrElse(QueryService.DefaultMaxRows.toLong))
         // pool per the reference (ResultPlan.scala:66): the
         // acceleration rule ran just before us in this post-hoc batch
         // and recorded whether it swapped in a routed plan (and, via
@@ -96,7 +90,8 @@ final case class ServeGuardRule(session: SparkSession)
         val via = QueryRouter.QueryStats.peekLastForThread()
           .filter(_ => routed).map(r => s"cube:${r._1}")
           .getOrElse(if (routed) "cube" else "pushdown")
-        ServeGuard(cap, timeoutSec, QueryService.poolFor(routed, est),
+        ServeGuard(cap, QueryService.confTimeout(session),
+          QueryService.poolFor(routed, est),
           QueryLog.Route.take(routed, via, why), stripped)
     }
   }
@@ -108,7 +103,7 @@ final case class ServeGuardRule(session: SparkSession)
 /** Root-only marker: "this plan is served to an external client under
   * cap/timeout/pool". Pass-through schema; a barrier to nothing the
   * root needs (its child is the fully optimized query). */
-final case class ServeGuard(cap: Long, timeoutSec: Long, pool: String,
+final case class ServeGuard(cap: Long, timeout: Duration, pool: String,
                             route: QueryLog.Route,
                             child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
@@ -119,8 +114,8 @@ final case class ServeGuard(cap: Long, timeoutSec: Long, pool: String,
 
 object ServeGuardStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ServeGuard(cap, timeoutSec, pool, route, child) =>
-      ServeGuardExec(cap, timeoutSec, pool, route, planLater(child)) :: Nil
+    case ServeGuard(cap, timeout, pool, route, child) =>
+      ServeGuardExec(cap, timeout, pool, route, planLater(child)) :: Nil
     case _ => Nil
   }
 }
@@ -151,28 +146,19 @@ final class ServeGuardColumnarRule
 }
 
 /** The physical consumption point (ResultPlan.scala:94 parity): every
-  * consumption path funnels through `executeCollect`, which runs the
-  * child under the statement's job group with the deadline armed and
-  * takes at most cap+1 rows — refusal, never silent truncation. */
-final case class ServeGuardExec(cap: Long, timeoutSec: Long, pool: String,
+  * consumption path funnels through `executeCollect`/`executeTake`,
+  * which run the child inside QueryService's guarded window (the
+  * statement's job group, the router's pool, the deadline) and take at
+  * most cap+1 rows — refusal, never silent truncation. */
+final case class ServeGuardExec(cap: Long, timeout: Duration, pool: String,
                                 route: QueryLog.Route,
                                 child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def outputOrdering: Seq[SortOrder] = child.outputOrdering
 
-  override def executeCollect(): Array[InternalRow] = guarded { capInt =>
-    val rows = child.executeTake(capInt + 1)
-    if (rows.length > capInt)
-      throw new QueryService.ResultCapExceeded(currentGroup, capInt)
-    rows
-  }
+  override def executeCollect(): Array[InternalRow] = serve(Int.MaxValue)
 
-  override def executeTake(n: Int): Array[InternalRow] = guarded { capInt =>
-    val rows = child.executeTake(math.min(n.toLong, capInt + 1L).toInt)
-    if (rows.length > capInt)
-      throw new QueryService.ResultCapExceeded(currentGroup, capInt)
-    rows
-  }
+  override def executeTake(n: Int): Array[InternalRow] = serve(n)
 
   /** incremental-collect / downstream-composition path: the guard is a
     * serving root, so driver-materializing here is the contract, not a
@@ -182,76 +168,31 @@ final case class ServeGuardExec(cap: Long, timeoutSec: Long, pool: String,
     session.sparkContext.parallelize(rows.toIndexedSeq, 1)
   }
 
-  private def currentGroup: String =
-    Option(session.sparkContext.getLocalProperty("spark.jobGroup.id"))
-      .getOrElse("graft-served")
-
-  private def guarded(body: Int => Array[InternalRow]): Array[InternalRow] = {
-    val sc = session.sparkContext
-    val capInt = math.min(cap, Int.MaxValue - 1L).toInt
-    // the Thriftserver arms a job group per statement; a bare session
-    // (tests, notebooks) gets one from the guard so the deadline has
-    // something to cancel
-    val provided = Option(sc.getLocalProperty("spark.jobGroup.id"))
-    val group = provided.getOrElse {
-      val g = "graft-serve-" + java.util.UUID.randomUUID().toString
-      sc.setJobGroup(g, "graft served query", interruptOnCancel = true)
-      g
-    }
-    val prevPool = sc.getLocalProperty("spark.scheduler.pool")
-    sc.setLocalProperty("spark.scheduler.pool", pool)
-    // the Thriftserver registers its statement group WITHOUT task
-    // interruption (spark.sql.thriftServer.forceCancel default) — a
-    // deadline kill must interrupt even a task blocked in user code
-    // (reference: ResultPlan's interrupt path), so flip the property
-    // on this submitting thread before any job launches
-    val prevInterrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-    sc.setLocalProperty("spark.job.interruptOnCancel", "true")
-    val timedOut = new AtomicBoolean(false)
-    // PERIODIC after the deadline: a one-shot cancel that fires in the
-    // gap before the first job launches is a no-op and the query runs
-    // to completion on the cluster — re-cancelling every 2 s until the
-    // finally below disarms catches late-starting jobs too
-    val armed =
-      if (timeoutSec <= 0) None
-      else Some(QueryService.deadlines.scheduleWithFixedDelay(new Runnable {
-        override def run(): Unit = {
-          timedOut.set(true)
-          sc.cancelJobGroup(group)
-        }
-      }, timeoutSec, 2L, TimeUnit.SECONDS))
-    try {
-      // nested analyses/preparations during execution (AQE re-plans,
-      // subquery planning) are internal — they must not grow guards
-      val out = GraftSql.withInternalAnalysis { body(capInt) }
-      // a deadline that fired between jobs still refuses — an expired
-      // query must not return rows (QueryService.run parity)
-      if (timedOut.get())
-        throw new QueryService.QueryTimedOut(group,
-          Duration(timeoutSec, TimeUnit.SECONDS), null)
+  /** at most `n` rows, refused past the cap. Nested analyses and
+    * preparations during execution (AQE re-plans, subquery planning)
+    * are internal — they must not grow guards. */
+  private def serve(n: Int): Array[InternalRow] =
+    GraftSql.withInternalAnalysis {
+      val capInt = math.min(cap, Int.MaxValue - 1L).toInt
+      // the Thriftserver arms a job group per statement; a bare session
+      // (tests, notebooks) gets one from the window so the deadline has
+      // something to cancel
+      val (rows, group) = QueryService.guarded(session.sparkContext,
+          "graft-serve-" + java.util.UUID.randomUUID().toString,
+          "graft served query", None, pool, timeout) { w =>
+        val rows = child.executeTake(math.min(n.toLong, capInt + 1L).toInt)
+        if (rows.length > capInt)
+          throw new QueryService.ResultCapExceeded(w.group, capInt)
+        (rows, w.group)
+      }
       // a JDBC-served statement records the SAME served-query record
       // as the programmatic path (QueryMetricUtils parity): scan
       // actuals from the executed child, with the route the
       // acceleration rule embedded at analysis
       val (scanRows, scanBytes) = QueryService.scanMetrics(child)
       QueryLog.served(session, group, route, scanRows, scanBytes)
-      out
-    } catch {
-      case e: Throwable
-          if timedOut.get() &&
-            !e.isInstanceOf[QueryService.QueryTimedOut] =>
-        throw new QueryService.QueryTimedOut(group,
-          Duration(timeoutSec, TimeUnit.SECONDS), e)
-    } finally {
-      armed.foreach { f =>
-        f.cancel(false)
-        try { f.get(); () } catch { case _: Exception => () }
-      }
-      sc.setLocalProperty("spark.scheduler.pool", prevPool)
-      sc.setLocalProperty("spark.job.interruptOnCancel", prevInterrupt)
-      if (provided.isEmpty) sc.clearJobGroup()
+      rows
     }
-  }
 
   override protected def withNewChildInternal(
       newChild: SparkPlan): ServeGuardExec = copy(child = newChild)

@@ -47,45 +47,31 @@ class ServingSpec extends AnyFunSuite {
       QueryService.HeavyPool)
   }
 
-  test("per-query shuffle partitions follow the routed row estimate; " +
-      "pushdown keeps the session default") {
+  test("the router's light coalesce is the one routed-width decision: " +
+      "a small scalar query plans no exchange, an HLL query is not " +
+      "coalesced") {
     ensure()
-    // a routed point-ish aggregation: tiny estimate ⇒ 1-4 partitions
-    val routed = QueryService.run(spark, sf,
-      "SELECT n_name, count(*) AS n FROM graft_star GROUP BY n_name",
-      queryId = "svc-parts", cached = false)
-    assert(routed.routed)
-    assert(routed.shufflePartitions.exists(_ <= 4),
-      s"a small routed query must plan few partitions, " +
-        s"got ${routed.shufflePartitions}")
-    // pushdown: no override — the session default stands
-    val pd = QueryService.run(spark, sf,
-      "SELECT count(*) AS n FROM graft_star WHERE rand() >= -1",
-      queryId = "svc-parts-pd", cached = false)
-    assert(!pd.routed && pd.shufflePartitions.isEmpty)
-    // the thread-local conf override actually reaches planning: the
-    // same shuffle-bearing frame plans its exchange at the override
-    // width inside the wrap and at the session default outside it
-    import org.apache.spark.sql.graftbridge.ConfBridge
-    val df = graft.Tables.nation(spark, sf)
-      .groupBy("n_regionkey").count()
-    val (w3, wDefault) = (
-      ConfBridge.withShufflePartitions(spark, Some(3)) {
-        val d = graft.Tables.nation(spark, sf)
-          .groupBy("n_regionkey").count()
-        d.collect()
-        QueryService.plannedShufflePartitions(
-          d.queryExecution.executedPlan)
-      }, {
-        df.collect()
-        QueryService.plannedShufflePartitions(
-          df.queryExecution.executedPlan)
-      })
-    assert(w3.contains(3), s"override must reach the exchange, got $w3")
-    val sessionDefault =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(wDefault.contains(sessionDefault),
-      s"outside the wrap the session default must stand, got $wDefault")
+    // the default serving path: sqlCached persists the routed frame,
+    // so its width is whatever the router planned into it
+    def widthAndCoalesce(sql: String): (Option[Int], Boolean) = {
+      val r = GraftSql.sqlCached(spark, sf, sql)
+      assert(r.routed, s"must route: $sql")
+      r.df.collect()
+      val plan = r.df.queryExecution.executedPlan
+      (QueryService.plannedShufflePartitions(plan),
+       QueryService.flatten(plan).exists(
+         _.isInstanceOf[org.apache.spark.sql.execution.CoalesceExec]))
+    }
+    val (scalarWidth, scalarCoalesced) = widthAndCoalesce(
+      "SELECT r_name, sum(l_quantity) AS q FROM graft_star GROUP BY r_name")
+    assert(scalarWidth.isEmpty,
+      s"a small scalar routed query must plan no exchange, got $scalarWidth")
+    assert(scalarCoalesced, "a small scalar routed scan must be coalesced")
+    // heavy-state gate: a dense-HLL merge keeps the parallel aggregation
+    val (_, hllCoalesced) = widthAndCoalesce(
+      "SELECT r_name, approx_count_distinct(o_custkey) AS c " +
+        "FROM graft_star GROUP BY r_name")
+    assert(!hllCoalesced, "an HLL routed scan must not be coalesced")
   }
 
   test("a served query carries the executed plan's scan actuals") {
@@ -197,6 +183,38 @@ class ServingSpec extends AnyFunSuite {
       assert(e2.isInstanceOf[QueryService.QueryTimedOut],
         s"conf-armed deadline must fire, got $e2")
     } finally spark.conf.unset(QueryService.TimeoutConf)
+  }
+
+  test("a deadline that elapses before the first job still kills the " +
+      "query") {
+    ensure()
+    ServingSpecState.sleepClaimed.set(false)
+    // registered by the timeout test above; re-registered so this test
+    // also runs on its own
+    spark.udf.register("graft_slow_to", (s: String) => {
+      if (s == "NATION_0" &&
+          ServingSpecState.sleepClaimed.compareAndSet(false, true)) {
+        ServingSpecState.slowStarted = true
+        Thread.sleep(120000)
+      }
+      s
+    })
+    // 1 ms elapses during routing, before any job of the query exists:
+    // a one-shot group cancel would find nothing to cancel and the
+    // sleeping task would run for its full 120 s
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      QueryService.run(spark, sf,
+        "SELECT n_name, count(*) AS c FROM graft_star " +
+          "WHERE graft_slow_to(n_name) = n_name GROUP BY n_name",
+        queryId = "svc-early-deadline", cached = false,
+        timeout = 1.millisecond)
+    }
+    val elapsed = (System.nanoTime() - t0).nanos
+    assert(e.isInstanceOf[QueryService.QueryTimedOut],
+      s"expected QueryTimedOut, got $e")
+    assert(elapsed < 30.seconds,
+      s"the deadline must stop the query, not wait it out: took $elapsed")
   }
 
   test("a served routed query runs under its job group in a FAIR pool") {
